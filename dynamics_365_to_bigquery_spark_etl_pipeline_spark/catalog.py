@@ -58,10 +58,21 @@ def table_num_rows(sf_dir: str, name: str) -> int:
 
 
 def scan_splits(spark: SparkSession, sf_dir: str, name: str) -> int:
-    """Driver-side estimate of the scan task count for one fixture
-    table: ceil(file_bytes / maxPartitionBytes). File metadata only —
-    no Spark job, same discipline as ``table_num_rows``."""
-    size = os.path.getsize(f"{sf_dir}/{name}.parquet")
+    """Driver-side estimate of the scan task count for one table:
+    ceil(bytes / maxPartitionBytes), where a directory-layout table
+    counts the bytes of its part files (the size of the directory
+    entry itself says nothing about the data). File metadata only — no
+    Spark job, same discipline as ``table_num_rows``."""
+    path = f"{sf_dir}/{name}.parquet"
+    if os.path.isdir(path):
+        size = sum(
+            os.path.getsize(os.path.join(root, f))
+            for root, _dirs, files in os.walk(path)
+            for f in files
+            if not f.startswith((".", "_"))
+        )
+    else:
+        size = os.path.getsize(path)
     try:
         max_pb = int(
             spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()

@@ -317,7 +317,8 @@ def exact_text_dedup(
     # q_dedup_minhash_fast pipeline at sf0.1 — the extra join adds
     # jobs/stages in the staged AQE-off subtrees (and its SMJ re-sorts
     # the corpus by doc_id, so even at scale it trades one sort for
-    # another plus an extra corpus scan). OPTIMIZATION_r16.md §minby.
+    # another plus an extra corpus scan). Recorded in SCALING.md,
+    # round 15 finding 3.
     groups = hashed.groupBy("_h1", "_h2").agg(
         F.min("doc_id").alias("_rid"), F.min_by("text", "doc_id").alias("text")
     )
@@ -342,8 +343,8 @@ def feature_hashes_fast(features: Column) -> Column:
 
 
 def _make_majority_counts():
-    """Factory for the shared per-row bit-count kernel (closure so
-    cloudpickle ships it by value into both Arrow folds — the
+    """Factory for the per-row bit-count kernel (closure so
+    cloudpickle ships it by value into the Arrow fold — the
     bare-session pickling rule). Handles the two review findings (r8):
 
     - ``np.add.reduceat`` mis-segments around EMPTY rows (a trailing
@@ -384,8 +385,13 @@ def make_simhash_blocks64_arrow():
     """Arrow majority fold for the fast family: ONE 64-bit hash array
     per doc (xxhash64 carries 64 real bits, so no second seed is
     needed); blocks 0-3 are the per-bit majorities of bits 0-15, 16-31,
-    32-47, 48-63. Same batch-numpy shape as
-    ``make_simhash_blocks_arrow``."""
+    32-47, 48-63: unpack every hash bit of the Arrow batch at once,
+    per-row bit counts via ``np.add.reduceat`` over row offsets,
+    strict-majority (count*2 > n) threshold, pack 16-bit blocks.
+
+    Factory returning a pandas_udf built at call time (UDF return-type
+    parsing needs an active session; closures ship by value for bare
+    sessions)."""
     import numpy as np
 
     from pyspark.sql.functions import pandas_udf
@@ -403,49 +409,6 @@ def make_simhash_blocks64_arrow():
             axis=1,
         )
         return pd.Series(list(out)).map(lambda a: a.tolist())
-
-    return blocks
-
-
-def make_simhash_blocks_arrow():
-    """Arrow-vectorized twin of ``simhash64_blocks`` (r8 — the
-    production signature step): the JVM fold is optimal as interpreted
-    HOFs go (one aggregate pass, 32 int ops per element), but it is
-    STILL interpreted — 64 bit-tests x ~100 shingles x n docs dominated
-    the sf1 simhash wall. This kernel takes the SAME JVM-computed hash
-    arrays (values identical by construction — hashing stays md5/JVM
-    so the DuckDB oracle is untouched) and does the majority fold as
-    batch numpy: unpack all 32 bits of every hash in the Arrow batch at
-    once, per-row bit counts via ``np.add.reduceat`` over row offsets,
-    strict-majority (count*2 > n) threshold, pack 16-bit blocks. Pure
-    integer ops — results are bit-identical to the JVM fold
-    (equivalence-tested on the full corpus in pytest).
-
-    Factory returning a pandas_udf built at call time (UDF return-type
-    parsing needs an active session; closures ship by value for bare
-    sessions)."""
-    import numpy as np
-
-    from pyspark.sql.functions import pandas_udf
-
-    B = SIMHASH_BLOCK_BITS  # captured locally: the closure must not
-    # reference module globals (bare-session pickling rule)
-    nbits = 2 * B  # 32 bits used per hash family
-    majority_counts = _make_majority_counts()
-
-    def majority_words(series: pd.Series):
-        counts, lens = majority_counts(series, nbits)
-        maj = (counts * 2 > lens[:, None]).astype(np.int64)
-        w = 1 << np.arange(B, dtype=np.int64)
-        return maj[:, :B] @ w, maj[:, B:] @ w
-
-    @pandas_udf("array<long>")
-    def blocks(h0: pd.Series, h1: pd.Series) -> pd.Series:
-        b0, b1 = majority_words(h0)
-        b2, b3 = majority_words(h1)
-        return pd.Series(
-            list(np.stack([b0, b1, b2, b3], axis=1))
-        ).map(lambda a: a.tolist())
 
     return blocks
 
@@ -486,9 +449,8 @@ def hamming64_sql(a: str, b: str) -> str:
     return f"CAST({terms} AS BIGINT)"
 
 
-# round count of the most recent connected_components call, by method —
-# introspection for tests and the A/B harness (scripts/ab_star_cc.py),
-# never consumed by production code.
+# round count of the most recent connected_components call —
+# introspection for tests, never consumed by production code.
 LAST_CC_ROUNDS: dict[str, int] = {}
 
 
@@ -529,7 +491,6 @@ def connected_components(
     id_a: str = "id_a",
     id_b: str = "id_b",
     max_iters: int | None = None,
-    method: str = "star",
     durable: bool = False,
 ) -> DataFrame:
     """Duplicate GROUPS from near-dup pairs: connected components.
@@ -541,65 +502,42 @@ def connected_components(
     emits PAIRS, but retention decisions are per-CLUSTER (A~B, B~C must
     keep exactly one of {A,B,C}, not resolve pairs independently).
 
-    ``method="star"`` (the production default, r8 verdict #3) runs the
-    alternating large-star/small-star contraction (Kiveris et al.,
-    "Connected Components in MapReduce and Beyond"): each round rewires
-    every node's strictly-larger neighbors (large-star) then its
+    Runs the alternating large-star/small-star contraction (Kiveris
+    et al., "Connected Components in MapReduce and Beyond"): each round
+    rewires every node's strictly-larger neighbors (large-star) then its
     smaller neighbors (small-star) onto the local minimum, so label
     distances HALVE-or-better per round and convergence is
     O(log diameter) rounds — a 1000-link chain closes in ~11 rounds
     where min-label propagation needs ~1000 (the min travels one hop
-    per round). Identical labels by construction (equivalence
-    pytest-pinned on planted chains + the shared fixtures; the
-    recursive-CTE oracle of q_dedup_groups independently verifies the
-    star path in the driver run).
+    per round; r8 measured the drop, SCALING.md). Labels are pinned
+    against a union-find reference in pytest, and the recursive-CTE
+    DuckDB oracle of q_dedup_groups independently verifies them.
 
-    ``method="propagate"`` keeps the Pregel-style min-label loop as the
-    A/B twin: each round every node takes the min of its own and its
-    neighbors' labels — one join + one groupBy per round, <=
-    graph-diameter rounds. Near-dup clusters are shallow (most 2-3
-    nodes), where its ~2x-cheaper round beats star's extra shuffles;
-    long-chain corpora (entity resolution over drifting names) are
-    exactly where O(diameter) rounds of full shuffles plus a driver
-    count per round stop scaling.
+    Edges are kept as canonical (u, v) with u > v; the fixpoint is a
+    union of stars whose centers are the component minima. Each round
+    is a fixed number of key-partitioned shuffles (groupBy u + self-join
+    on u + distinct) — never all-pairs — and the per-round convergence
+    probe (one collected row) is EXACT (count match + containment over the two checkpointed
+    edge sets), never a lossy hash fingerprint: a fingerprint collision
+    (~2^-30/round for a modular hash-sum) would break the loop
+    mid-contraction and silently return wrong group labels — wrong
+    DELETE sets downstream.
 
-    Both methods ``localCheckpoint`` each round's frame: persist()
-    truncates EXECUTION but not the LOGICAL PLAN, and round N's plan
-    references round N-1 multiple times, so without the cut the plan
-    tree grows exponentially and the driver OOMs just rendering it
-    around a dozen rounds. ``durable=True`` swaps every round's cut to
-    Spark's RELIABLE checkpoint (files on the checkpoint filesystem —
+    Every round's frame is ``localCheckpoint``-ed: persist() truncates
+    EXECUTION but not the LOGICAL PLAN, and round N's plan references
+    round N-1 multiple times, so without the cut the plan tree grows
+    exponentially and rendering it alone exhausts memory around a dozen
+    rounds. ``durable=True`` swaps every round's cut to Spark's RELIABLE
+    checkpoint (files on the checkpoint filesystem —
     ``$SPARK_GRAFT_SCRATCH_DIR`` or a session scratch dir locally, a
     shared FS on a cluster), so a long iterative run survives executor
-    loss instead of recomputing the loop. The driver-side convergence check (one scalar per
-    round) is the standard shape for iterative algorithms on Spark —
-    it moves one fingerprint, not data.
+    loss instead of recomputing the loop.
 
-    Runs to convergence by default (termination is guaranteed for both
-    methods). ``max_iters`` is an optional safety valve for
-    capped-latency callers: when set, exhausting it RAISES rather than
-    returning stale (i.e. wrong) group labels.
+    Runs to convergence by default (termination is guaranteed).
+    ``max_iters`` is an optional safety valve for capped-latency
+    callers: when set, exhausting it RAISES rather than returning stale
+    (i.e. wrong) group labels.
     """
-    if method == "star":
-        return _cc_star(pairs, id_a, id_b, max_iters, durable)
-    if method != "propagate":
-        raise ValueError(f"unknown connected_components method {method!r}")
-    return _cc_propagate(pairs, id_a, id_b, max_iters, durable)
-
-
-def _cc_star(
-    pairs: DataFrame, id_a: str, id_b: str, max_iters: int | None,
-    durable: bool = False,
-) -> DataFrame:
-    """Alternating large-star/small-star contraction. Edges are kept as
-    canonical (u, v) with u > v; the fixpoint is a union of stars whose
-    centers are the component minima. Each round is a fixed number of
-    key-partitioned shuffles (groupBy u + self-join on u + distinct) —
-    never all-pairs — and the convergence probe is EXACT (count match +
-    anti-join emptiness over the two checkpointed edge sets), never a
-    lossy hash fingerprint: a fingerprint collision (~2^-30/round for a
-    modular hash-sum) would break the loop mid-contraction and silently
-    return wrong group labels — wrong DELETE sets downstream."""
     u, v = F.col("u"), F.col("v")
     # stage the raw pair projection ONCE: both the edge set and the node
     # set derive from it, and `pairs` is typically an expensive LSH
@@ -614,9 +552,8 @@ def _cc_star(
         .distinct(),
         durable,
     )
-    # every node in the PAIR graph gets a label row, exactly like the
-    # propagate twin (self-pairs and isolated ids included via the
-    # left-join fill at the end)
+    # every node in the PAIR graph gets a label row (self-pairs and
+    # isolated ids included via the left-join fill at the end)
     nodes = (
         raw.select(F.col("a").alias("id"))
         .unionByName(raw.select(F.col("b").alias("id")))
@@ -685,7 +622,7 @@ def _cc_star(
         prev_edges, prev_n = edges, n
         if max_iters is not None and rounds >= max_iters:
             raise RuntimeError(
-                f"connected_components(star) did not converge after "
+                f"connected_components did not converge after "
                 f"{max_iters} rounds; raise max_iters (rounds needed ~ "
                 "log2 of the largest component diameter)"
             )
@@ -697,63 +634,6 @@ def _cc_star(
         edges.select(u.alias("id"), v.alias("group_id")), "id", "left"
     ).select("id", F.coalesce("group_id", F.col("id")).alias("group_id"))
     return labels
-
-
-def _cc_propagate(
-    pairs: DataFrame, id_a: str, id_b: str, max_iters: int | None,
-    durable: bool = False,
-) -> DataFrame:
-    """Min-label propagation twin (see connected_components docstring):
-    O(diameter) rounds, one join + one groupBy each."""
-    fwd = pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
-    rev = pairs.select(F.col(id_b).alias("src"), F.col(id_a).alias("dst"))
-    edges = fwd.unionByName(rev).persist()
-    labels = _cut(
-        edges.select(F.col("src").alias("id"))
-        .distinct()
-        .withColumn("group_id", F.col("id")),
-        durable,
-    )
-    try:
-        rounds = 0
-        while True:
-            msgs = edges.join(labels, edges.src == labels.id).select(
-                F.col("dst").alias("id"), "group_id"
-            )
-            # localCheckpoint materializes AND truncates lineage — the
-            # next round's plan starts from a leaf, not a 3x-deeper tree.
-            new_labels = _cut(
-                labels.unionByName(msgs)
-                .groupBy("id")
-                .agg(F.min("group_id").alias("group_id")),
-                durable,
-            )
-            changed = (
-                new_labels.join(
-                    labels.withColumnRenamed("group_id", "prev"), "id"
-                )
-                .filter(F.col("group_id") != F.col("prev"))
-                .count()
-            )
-            labels = new_labels
-            rounds += 1
-            if changed == 0:
-                break
-            if max_iters is not None and rounds >= max_iters:
-                # Unconverged labels are WRONG labels (a chain longer
-                # than max_iters still carries stale group_ids), and
-                # downstream retention would delete the wrong survivors
-                # — fail loudly rather than return them.
-                raise RuntimeError(
-                    f"connected_components did not converge after "
-                    f"{max_iters} rounds ({changed} labels still "
-                    "changing); raise max_iters (rounds needed = graph "
-                    "diameter)"
-                )
-        LAST_CC_ROUNDS["propagate"] = rounds
-        return labels
-    finally:
-        edges.unpersist()
 
 
 def exact_dedup(df: DataFrame, key: Column, id_col: str) -> DataFrame:

@@ -221,7 +221,7 @@ def resolve_entities(
 ) -> DataFrame:
     """Entity resolution over a master-data table: fuzzy-match names
     within ``max_dist`` edits (``fuzzy_join``), connect matches into
-    clusters (``dedup.connected_components`` min-label propagation),
+    clusters (``dedup.connected_components`` star contraction),
     and map EVERY row — singletons included — to its cluster's
     canonical id (the smallest member id, the same survivor rule as the
     dedup family). Returns (id, canonical_id, n_members).

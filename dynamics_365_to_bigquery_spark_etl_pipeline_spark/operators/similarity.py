@@ -886,7 +886,7 @@ def build_ivf_layout(
     assigner = (
         assign_ivf_buckets_matmul(corpus, centroids, id_col, vec_col)
         if scorer == "matmul"
-        else assign_ivf_buckets(corpus, centroids, id_col, vec_col, scorer=scorer)
+        else assign_ivf_buckets(corpus, centroids, id_col, vec_col)
     )
     assigner.write.mode("overwrite").partitionBy("bucket_id").parquet(out)
 
@@ -900,7 +900,6 @@ def ivf_topk_from_layout(
     nprobe: int = 4,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    scorer: str = "jvm",
 ) -> DataFrame:
     """ANN top-k against a PERSISTED ``build_ivf_layout`` index: the
     query batch's probe set decides which ``bucket_id=`` partitions are
@@ -909,7 +908,6 @@ def ivf_topk_from_layout(
     O(probed fraction of corpus), not O(corpus). Same probe/score/rank
     pipeline as ``ivf_topk``, so results are identical for the same
     centroids."""
-    score = _arrow_cosine_udf() if scorer == "arrow" else cosine
     q = queries.select(
         F.col(id_col).alias("query_id"), F.col(vec_col).alias("qvec")
     )
@@ -925,7 +923,7 @@ def ivf_topk_from_layout(
             "query_id",
             "qvec",
             "centroid_id",
-            score(F.col("qvec"), F.col("cent_vec")).alias("qsim"),
+            cosine(F.col("qvec"), F.col("cent_vec")).alias("qsim"),
         )
         .withColumn("pr", F.row_number().over(wq))
         .filter(F.col("pr") <= nprobe)
@@ -942,7 +940,7 @@ def ivf_topk_from_layout(
         .select(
             "query_id",
             F.col(id_col).alias("neighbor_id"),
-            score(F.col(vec_col), F.col("qvec")).alias("sim"),
+            cosine(F.col(vec_col), F.col("qvec")).alias("sim"),
         )
     )
     w = Window.partitionBy("query_id").orderBy(
@@ -960,7 +958,6 @@ def refine_centroids(
     centroids: DataFrame,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    scorer: str = "jvm",
 ) -> DataFrame:
     """One k-means (Lloyd) update: assign every vector to its nearest
     centroid, then recompute each centroid as the mean of its bucket.
@@ -976,7 +973,7 @@ def refine_centroids(
     (bucket_id, pos) aggregate, both map-side-combining; centroids that
     lose every vector drop out (k shrinks deterministically).
     """
-    assigned = assign_ivf_buckets(corpus, centroids, id_col, vec_col, scorer=scorer)
+    assigned = assign_ivf_buckets(corpus, centroids, id_col, vec_col)
     per_coord = assigned.select(
         "bucket_id", F.posexplode(F.col(vec_col)).alias("pos", "x")
     )
@@ -997,41 +994,16 @@ def refine_centroids(
     )
 
 
-def _arrow_cosine_udf():
-    """Arrow-vectorized cosine over two array columns: one numpy kernel
-    per batch vs the interpreted per-element JVM fold. Built at call
-    time (pandas_udf parses its DDL eagerly, needing a session)."""
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("double")
-    def _arrow_cosine(a: pd.Series, b: pd.Series) -> pd.Series:
-        import numpy as np
-        import pandas as pd
-
-        va = np.stack(a.to_numpy()).astype(np.float64)
-        vb = np.stack(b.to_numpy()).astype(np.float64)
-        dots = np.einsum("ij,ij->i", va, vb)
-        return pd.Series(
-            dots / (np.linalg.norm(va, axis=1) * np.linalg.norm(vb, axis=1))
-        )
-
-    return _arrow_cosine
-
-
 def assign_ivf_buckets(
     corpus: DataFrame,
     centroids: DataFrame,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    scorer: str = "jvm",
 ) -> DataFrame:
     """Assign each vector to its nearest centroid by cosine (broadcast
-    pass; at scale, write the result partitioned by bucket).
-    ``scorer="arrow"`` swaps the per-pair JVM fold for the vectorized
-    numpy kernel — same tie-break, last-ulp sum-order differences only."""
+    pass; at scale, write the result partitioned by bucket)."""
     from pyspark.sql import Window
 
-    score = _arrow_cosine_udf() if scorer == "arrow" else cosine
     cent = centroids.select(
         F.col(id_col).alias("centroid_id"), F.col(vec_col).alias("cent_vec")
     )
@@ -1039,7 +1011,7 @@ def assign_ivf_buckets(
         id_col,
         vec_col,
         "centroid_id",
-        score(F.col(vec_col), F.col("cent_vec")).alias("csim"),
+        cosine(F.col(vec_col), F.col("cent_vec")).alias("csim"),
     )
     w = Window.partitionBy(id_col).orderBy(
         F.col("csim").desc(), F.col("centroid_id").asc()
@@ -1059,7 +1031,6 @@ def ivf_topk(
     nprobe: int = 4,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    scorer: str = "jvm",
 ) -> DataFrame:
     """IVF-bucketed ANN top-k: bucket the corpus by nearest centroid,
     probe each query's ``nprobe`` nearest buckets, exact cosine + top-k
@@ -1079,16 +1050,9 @@ def ivf_topk(
     are chunked into batches by the caller, each probing pruned bucket
     partitions.
 
-    ``scorer``: ``"jvm"`` (default) evaluates candidate cosine with the
-    JVM element fold — the path the DuckDB oracle mirrors term-for-term;
-    ``"arrow"`` scores each Arrow batch of candidate pairs with one
-    vectorized numpy kernel instead (~10x per-pair at sf1; last-ulp sum
-    order differs, ranks identical on non-adversarial data — the
-    pair-set equivalence is pytest-checked)."""
-    if scorer not in ("jvm", "arrow"):
-        raise ValueError(f"scorer must be 'jvm' or 'arrow', got {scorer!r}")
-    score = _arrow_cosine_udf() if scorer == "arrow" else cosine
-    bucketed = assign_ivf_buckets(corpus, centroids, id_col, vec_col, scorer=scorer)
+    Candidate cosine is the JVM element fold — the path the DuckDB
+    oracle mirrors term-for-term."""
+    bucketed = assign_ivf_buckets(corpus, centroids, id_col, vec_col)
     q = queries.select(
         F.col(id_col).alias("query_id"), F.col(vec_col).alias("qvec")
     )
@@ -1116,7 +1080,7 @@ def ivf_topk(
         .select(
             "query_id",
             F.col(id_col).alias("neighbor_id"),
-            score(F.col(vec_col), F.col("qvec")).alias("sim"),
+            cosine(F.col(vec_col), F.col("qvec")).alias("sim"),
         )
     )
     w = Window.partitionBy("query_id").orderBy(

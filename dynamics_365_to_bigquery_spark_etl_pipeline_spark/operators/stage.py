@@ -36,14 +36,11 @@ with static shuffle partitioning and no broadcast joins — acceptable
 for the corpus-sized member maps these pipelines stage (they would
 never broadcast at real scale), and the price of laziness under AQE.
 
-Three backends, one dispatcher (r9 verdict #1):
+Two backends, one dispatcher (r9 verdict #1):
 
 - ``lazy_stage`` — blocks in the executors' block managers via
   ``localCheckpoint``. Fastest re-read, but executor-pinned (an
-  executor loss at scale recomputes or fails the staged pipelines) and
-  the default ``MEMORY_AND_DISK`` level competes with shuffle/exec
-  memory. ``storage_level="DISK_ONLY"`` removes the memory pressure
-  while keeping the pinning.
+  executor loss at scale recomputes or fails the staged pipelines).
 - ``durable_stage`` — the staged partitions go to the session's
   CHECKPOINT DIRECTORY on the shared filesystem (Spark's reliable
   checkpoint), so they survive executor loss and never occupy block-
@@ -54,21 +51,13 @@ Three backends, one dispatcher (r9 verdict #1):
   map stages do NOT re-execute — an accumulator-counted UDF in the map
   stage fired exactly once per row) to write the files. A scratch
   PARQUET stage cannot keep this laziness — a parquet write is an eager
-  job by construction — which is why the durable-lazy backend rides
-  Spark's checkpoint files instead; ``parquet_stage`` below is the
-  eager scratch-parquet variant for callers that control timing.
-- ``parquet_stage`` — EAGER: writes the subtree to a scratch parquet
-  dir now and returns the read-back. Columnar re-reads (column pruning
-  applies downstream, unlike checkpoint row files) and the cheapest
-  storage; for pipeline code paths where construction == execution
-  anyway.
+  job by construction — which is why the durable backend rides Spark's
+  checkpoint files instead.
 
-``stage`` dispatches between them per call site: an explicit
-``backend=`` wins, else ``$SPARK_GRAFT_STAGE_BACKEND`` (``local`` |
-``local_disk`` | ``durable``, default ``local``; the eager ``parquet``
-backend is explicit-arg-only — see ``stage``) — so the sf10 A/B
-(SCALING.md, r9 verdict #5) flips every staged pipeline with one env
-var and zero plan edits.
+``stage`` picks one from the deployment setting
+``$SPARK_GRAFT_STAGE_BACKEND`` (``local`` | ``durable``, default
+``local``): ``durable`` is for preemptible clusters, where executor
+loss is routine (SCALING.md, sf10 staging A/B).
 """
 
 from __future__ import annotations
@@ -88,19 +77,6 @@ _MID_COMPILE_HOOK: Optional[Callable[[], None]] = None
 
 BACKEND_ENV = "SPARK_GRAFT_STAGE_BACKEND"
 SCRATCH_ENV = "SPARK_GRAFT_SCRATCH_DIR"
-
-_SCRATCH_DIRS: list[str] = []  # session-scoped, swept at process exit
-_GC_REGISTERED = False
-
-
-def _register_scratch(path: str) -> None:
-    global _GC_REGISTERED
-    _SCRATCH_DIRS.append(path)
-    if not _GC_REGISTERED:
-        _GC_REGISTERED = True
-        atexit.register(
-            lambda: [shutil.rmtree(p, ignore_errors=True) for p in _SCRATCH_DIRS]
-        )
 
 
 def _clone_compile(df: DataFrame):
@@ -128,15 +104,9 @@ def _clone_compile(df: DataFrame):
     return spark, jspark, of_rows, of_rows(jclone, df._jdf.logicalPlan())
 
 
-def lazy_stage(df: DataFrame, storage_level: str | None = None) -> DataFrame:
+def lazy_stage(df: DataFrame) -> DataFrame:
     spark, jspark, of_rows, staged_clone = _clone_compile(df)
-    if storage_level:
-        jlevel = getattr(
-            spark._jvm.org.apache.spark.storage.StorageLevel, storage_level
-        )()
-        staged = staged_clone.localCheckpoint(False, jlevel)
-    else:
-        staged = staged_clone.localCheckpoint(False)
+    staged = staged_clone.localCheckpoint(False)
     # Re-bind the checkpointed LogicalRDD to the ORIGINAL session: all
     # downstream composition/compile happens under the caller's conf.
     return DataFrame(of_rows(jspark, staged.logicalPlan()), spark)
@@ -152,7 +122,7 @@ def _ensure_checkpoint_dir(spark) -> None:
     if sc._jsc.sc().checkpointDir().isEmpty():
         root = os.environ.get(SCRATCH_ENV) or tempfile.gettempdir()
         path = tempfile.mkdtemp(prefix="spark_graft_stage_ck_", dir=root)
-        _register_scratch(path)
+        atexit.register(shutil.rmtree, path, ignore_errors=True)
         sc.setCheckpointDir(path)
 
 
@@ -170,65 +140,15 @@ def durable_stage(df: DataFrame) -> DataFrame:
     return DataFrame(of_rows(jspark, staged.logicalPlan()), spark)
 
 
-def parquet_stage(df: DataFrame) -> DataFrame:
-    """EAGER scratch-parquet stage: write the subtree once, return the
-    columnar read-back. NOT construction-lazy — calling this runs the
-    subtree's write job immediately — so it belongs in pipeline code
-    where construction is execution (sinks, A/B harnesses), never in a
-    registry query function (enumerating the registry would run full
-    pipelines, the r7 trap ``lazy_stage`` exists to avoid). In exchange
-    the re-reads are parquet: column pruning and predicate pushdown
-    apply downstream, which checkpoint row files cannot offer.
-
-    Each call writes a FULL scratch copy, swept only at process exit —
-    long sessions staging large frames repeatedly should point
-    ``$SPARK_GRAFT_SCRATCH_DIR`` at real disk (the default tmpdir is
-    commonly tmpfs = RAM) and budget for N live copies. The durable
-    backend's checkpoint files, by contrast, are GC'd mid-session with
-    their RDDs (``spark.cleaner.referenceTracking.cleanCheckpoints`` is
-    set by ``session.get_spark``)."""
-    spark = df.sparkSession
-    root = os.environ.get(SCRATCH_ENV) or tempfile.gettempdir()
-    path = tempfile.mkdtemp(prefix="spark_graft_stage_pq_", dir=root)
-    _register_scratch(path)
-    out = os.path.join(path, "stage")
-    df.write.parquet(out)
-    return spark.read.schema(df.schema).parquet(out)
+_BACKENDS = {"local": lazy_stage, "durable": durable_stage}
 
 
-_BACKENDS = {
-    "local": lazy_stage,
-    # the A/B middle arm: executor-pinned like local, but blocks on
-    # executor-local disk — isolates block-manager MEMORY pressure from
-    # durability when chasing staged-pipeline variance (SCALING.md)
-    "local_disk": lambda df: lazy_stage(df, storage_level="DISK_ONLY"),
-    "durable": durable_stage,
-    "parquet": parquet_stage,
-}
-
-
-def stage(df: DataFrame, backend: str | None = None) -> DataFrame:
-    """Stage a multiply-consumed subplan through the selected backend:
-    explicit ``backend=`` wins, else ``$SPARK_GRAFT_STAGE_BACKEND``
-    (default ``local``). The env knob is read at CALL time so harness
-    sweeps flip every staged pipeline without plan edits.
-
-    The env knob only accepts the LAZY backends (``local`` |
-    ``local_disk`` | ``durable``): ``stage()`` sits inside registry
-    query FUNCTIONS, where an eager backend would run full pipeline
-    write jobs at plan-construction time — schema inspection, explain,
-    registry enumeration — the exact r7 trap ``lazy_stage`` exists to
-    avoid (review finding). ``parquet`` remains available per call site
-    via an explicit ``backend="parquet"`` in pipeline code that controls
-    its own timing."""
-    name = backend or os.environ.get(BACKEND_ENV) or "local"
-    if backend is None and name == "parquet":
-        raise ValueError(
-            f"{BACKEND_ENV}=parquet is not allowed: the eager parquet "
-            "stage would execute every staged registry subtree at plan-"
-            "construction time; pass backend='parquet' explicitly at a "
-            "call site that controls its own timing"
-        )
+def stage(df: DataFrame) -> DataFrame:
+    """Stage a multiply-consumed subplan through the backend named by
+    ``$SPARK_GRAFT_STAGE_BACKEND`` (default ``local``). The setting is
+    read at CALL time, so a deployment flips every staged pipeline
+    without plan edits."""
+    name = os.environ.get(BACKEND_ENV) or "local"
     fn = _BACKENDS.get(name)
     if fn is None:
         raise ValueError(

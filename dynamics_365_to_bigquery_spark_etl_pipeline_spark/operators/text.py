@@ -291,6 +291,14 @@ def _sql_quote(s: str) -> str:
     return "'" + s.replace("'", "''") + "'"
 
 
+def _spark_sql_quote(s: str) -> str:
+    r"""``_sql_quote`` for Spark SQL: Spark's parser also reads ``\`` as
+    an escape character (``'a\nb'`` is a newline, ``'a\'`` runs on past
+    its closing quote), so backslashes are doubled before the quotes.
+    DuckDB keeps ``\`` literal — its oracle SQL uses ``_sql_quote``."""
+    return _sql_quote(s.replace("\\", "\\\\"))
+
+
 def pii_scrub_sql(expr: str) -> dict[str, str]:
     cur = expr
     out: dict[str, str] = {}

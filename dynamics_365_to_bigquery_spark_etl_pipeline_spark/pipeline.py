@@ -210,13 +210,11 @@ class EntityPipeline:
         # NOT pre-staged, by measurement (r10 verdict #7): the
         # bucketed/rollup path consumes `prepared` 2-3 times and each
         # consumer re-runs the inference CSV parse, which made an eager
-        # parquet pre-stage (stage(prepared, backend="parquet")) the
-        # natural candidate — but the A/B (scripts/ab_delta_stage.py)
-        # measured the staged run SLOWER at both probed delta sizes
-        # (0.89x at 53k rows, 0.93x at 267k): the delta parse is not
-        # the bottleneck, the merge/write is, and the scratch write
-        # never amortizes. parquet_stage stays explicit-arg-only for
-        # callers whose staged frame is re-read enough times to pay.
+        # scratch-parquet pre-stage the natural candidate — but the
+        # recorded A/B (SCALING.md, r10) measured the staged run SLOWER
+        # at both probed delta sizes (0.89x at 53k rows, 0.93x at
+        # 267k): the delta parse is not the bottleneck, the merge/write
+        # is, and the scratch write never amortizes.
 
         # Touched buckets computed ONCE per run (the rollup fold and the
         # bucketed write both need them; each used to run its own

@@ -18,6 +18,9 @@ import functools
 import os
 import threading
 import weakref
+from concurrent.futures import Future
+
+import pyarrow.parquet as pq
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -97,8 +100,15 @@ def q_dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 #
 # Scope rules (the no-result-caching line):
 # - keyed on the LIVE SparkSession (weak — a new session after stop()
-#   rebuilds from parquet; nothing survives the process or is keyed on a
-#   data directory alone);
+#   rebuilds from parquet; nothing survives the process);
+# - within a session, keyed on the data directory AND a token of the
+#   `documents` file (footer row count + mtime): reuse is sound only
+#   while the input is unchanged, so a rewritten table misses the memo
+#   and evicts the directory's older entry, and a `documents` that is
+#   not a local file (an object-store URI) is never memoized;
+# - built at most ONCE per key: the first caller builds while
+#   concurrent callers wait on its future — each independent build
+#   would stage, and later execute, its own copy of the pipeline;
 # - md5 family ONLY (fast=False): the bench-timed row
 #   q_dedup_minhash_fast runs fast=True and must re-execute its full
 #   pipeline on every timed rep — memoizing it would time warm
@@ -108,18 +118,34 @@ _MD5_PARTS_LOCK = threading.Lock()
 
 
 def _minhash_parts(
-    spark: SparkSession, sf_dir: str, fast: bool, minband: bool = True
+    spark: SparkSession, sf_dir: str, fast: bool
 ) -> tuple[DataFrame, DataFrame]:
     if fast:  # bench-timed family: never shared (see memo note above)
-        return _minhash_parts_build(spark, sf_dir, fast, minband)
-    key = (os.path.abspath(sf_dir), minband)
+        return _minhash_parts_build(spark, sf_dir, fast)
+    path = os.path.abspath(sf_dir)
+    docs = os.path.join(path, "documents.parquet")
+    try:
+        key = (path, os.stat(docs).st_mtime_ns, pq.read_metadata(docs).num_rows)
+    except OSError:  # nothing local to fingerprint: reuse can't be invalidated
+        return _minhash_parts_build(spark, sf_dir, fast)
     with _MD5_PARTS_LOCK:
-        hit = _MD5_PARTS_MEMO.setdefault(spark, {}).get(key)
-    if hit is None:
-        hit = _minhash_parts_build(spark, sf_dir, fast, minband)
-        with _MD5_PARTS_LOCK:
-            _MD5_PARTS_MEMO.setdefault(spark, {})[key] = hit
-    return hit
+        memo = _MD5_PARTS_MEMO.setdefault(spark, {})
+        for stale in [k for k in memo if k[0] == path and k != key]:
+            del memo[stale]
+        fut = memo.get(key)
+        owner = fut is None
+        if owner:
+            fut = memo[key] = Future()
+    if owner:
+        try:
+            fut.set_result(_minhash_parts_build(spark, sf_dir, fast))
+        except BaseException as exc:
+            with _MD5_PARTS_LOCK:  # a failed build is not memoized
+                if memo.get(key) is fut:
+                    del memo[key]
+            fut.set_exception(exc)
+            raise
+    return fut.result()
 
 
 _minhash_parts.__doc__ = (
@@ -129,7 +155,7 @@ _minhash_parts.__doc__ = (
 
 
 def _minhash_parts_build(
-    spark: SparkSession, sf_dir: str, fast: bool, minband: bool = True
+    spark: SparkSession, sf_dir: str, fast: bool
 ) -> tuple[DataFrame, DataFrame]:
     """The rep-level HALF of `_minhash_pairs`: verified rep pairs
     (id_a, id_b, jacc) over distinct-text representatives plus the
@@ -183,70 +209,51 @@ def _minhash_parts_build(
     ).transform(stage).filter(F.size("sh") > 0)
     sig_fn = D.minhash_signature_fast if fast else D.minhash_signature
     sig = sh.select("doc_id", sig_fn(F.col("sh")).alias("sig"))
-    if minband:
-        # MIN-BAND EMISSION (r8, replacing `.distinct()`): a pair
-        # band-colliding k times used to emit k rows into a
-        # full-candidate-multiset exchange (duplicates live in different
-        # partitions — one per colliding band key — so distinct's
-        # map-side partial never collapsed them). Each side carries its
-        # SIGNATURE (16 longs — far cheaper than the md5 band strings)
-        # so a join row can decide locally whether its band is the
-        # pair's FIRST colliding band and emit exactly once. Slice
-        # equality stands in for band-hash equality: md5 is
-        # deterministic, so they differ only where two DIFFERENT slices
-        # md5-collide (~2^-128/pair-band) — and even then the pair still
-        # emits exactly once, from its first slice-equal band; it could
-        # only be LOST if every colliding band were a pure md5 collision.
-        r = D.N_MINHASH // D.LSH_BANDS
-        banded = sig.select(
-            "doc_id",
-            "sig",
-            F.posexplode(D.band_keys(F.col("sig"))).alias("band_id", "band_hash"),
-        ).transform(stage)
-        def slice_eq(b: int):
-            terms = [
-                F.element_at(F.col("a.sig"), b * r + j + 1).eqNullSafe(
-                    F.element_at(F.col("b.sig"), b * r + j + 1)
-                )
-                for j in range(r)
-            ]
-            return functools.reduce(lambda x, y: x & y, terms)
+    # MIN-BAND EMISSION (r8, replacing `.distinct()`): a pair
+    # band-colliding k times used to emit k rows into a
+    # full-candidate-multiset exchange (duplicates live in different
+    # partitions — one per colliding band key — so distinct's
+    # map-side partial never collapsed them). Each side carries its
+    # SIGNATURE (16 longs — far cheaper than the md5 band strings)
+    # so a join row can decide locally whether its band is the
+    # pair's FIRST colliding band and emit exactly once. Slice
+    # equality stands in for band-hash equality: md5 is
+    # deterministic, so they differ only where two DIFFERENT slices
+    # md5-collide (~2^-128/pair-band) — and even then the pair still
+    # emits exactly once, from its first slice-equal band; it could
+    # only be LOST if every colliding band were a pure md5 collision.
+    r = D.N_MINHASH // D.LSH_BANDS
+    banded = sig.select(
+        "doc_id",
+        "sig",
+        F.posexplode(D.band_keys(F.col("sig"))).alias("band_id", "band_hash"),
+    ).transform(stage)
+    def slice_eq(b: int):
+        terms = [
+            F.element_at(F.col("a.sig"), b * r + j + 1).eqNullSafe(
+                F.element_at(F.col("b.sig"), b * r + j + 1)
+            )
+            for j in range(r)
+        ]
+        return functools.reduce(lambda x, y: x & y, terms)
 
-        band_eq = F.array(*[slice_eq(b) for b in range(D.LSH_BANDS)])
-        cands = (
-            banded.alias("a")
-            .join(
-                banded.alias("b"),
-                (F.col("a.band_id") == F.col("b.band_id"))
-                & (F.col("a.band_hash") == F.col("b.band_hash"))
-                & (F.col("a.doc_id") < F.col("b.doc_id")),
-            )
-            .where(
-                F.array_position(band_eq, F.lit(True))
-                == F.col("a.band_id") + 1
-            )
-            .select(
-                F.col("a.doc_id").alias("id_a"), F.col("b.doc_id").alias("id_b")
-            )
+    band_eq = F.array(*[slice_eq(b) for b in range(D.LSH_BANDS)])
+    cands = (
+        banded.alias("a")
+        .join(
+            banded.alias("b"),
+            (F.col("a.band_id") == F.col("b.band_id"))
+            & (F.col("a.band_hash") == F.col("b.band_hash"))
+            & (F.col("a.doc_id") < F.col("b.doc_id")),
         )
-    else:  # pre-r8 reference plan, kept for the A/B + equivalence tests
-        banded = sig.select(
-            "doc_id",
-            F.posexplode(D.band_keys(F.col("sig"))).alias("band_id", "band_hash"),
-        ).transform(stage)
-        cands = (
-            banded.alias("a")
-            .join(
-                banded.alias("b"),
-                (F.col("a.band_id") == F.col("b.band_id"))
-                & (F.col("a.band_hash") == F.col("b.band_hash"))
-                & (F.col("a.doc_id") < F.col("b.doc_id")),
-            )
-            .select(
-                F.col("a.doc_id").alias("id_a"), F.col("b.doc_id").alias("id_b")
-            )
-            .distinct()
+        .where(
+            F.array_position(band_eq, F.lit(True))
+            == F.col("a.band_id") + 1
         )
+        .select(
+            F.col("a.doc_id").alias("id_a"), F.col("b.doc_id").alias("id_b")
+        )
+    )
     rep_pairs = (
         cands.join(sh.select(F.col("doc_id").alias("id_a"), F.col("sh").alias("sh_a")), "id_a")
         .join(sh.select(F.col("doc_id").alias("id_b"), F.col("sh").alias("sh_b")), "id_b")
@@ -264,14 +271,12 @@ def _minhash_parts_build(
     return rep_pairs, live
 
 
-def _minhash_pairs(
-    spark: SparkSession, sf_dir: str, fast: bool, minband: bool = True
-) -> DataFrame:
+def _minhash_pairs(spark: SparkSession, sf_dir: str, fast: bool) -> DataFrame:
     """Member-level pair set: `_minhash_parts` fanned out (rep pairs ->
     member cross pairs via two equi-joins; intra-clone pairs at jacc
     1.0) — both output-linear. See `_minhash_parts` for the routing
     docstring and measurements."""
-    rep_pairs, live = _minhash_parts(spark, sf_dir, fast, minband)
+    rep_pairs, live = _minhash_parts(spark, sf_dir, fast)
     ma = live.select(F.col("_rid").alias("id_a"), F.col("doc_id").alias("_ma"))
     mb = live.select(F.col("_rid").alias("id_b"), F.col("doc_id").alias("_mb"))
     cross = (
@@ -306,8 +311,6 @@ def q_dedup_minhash_fast(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_dedup_simhash(
     spark: SparkSession,
     sf_dir: str,
-    minblock: bool = True,
-    jvm_fold: bool = True,
     routed: bool = True,
 ) -> DataFrame:
     """SimHash near-dup pairs: 64-bit signature (4 x 16-bit blocks) over
@@ -324,7 +327,7 @@ def q_dedup_simhash(
     signature collapses (see operators/dedup.py feature_hashes).
 
     r8 took this query from ~62 s at sf1 to ~5 s in three measured
-    steps (scripts/ab_simhash_fold.py; pairs identical at every step):
+    steps (SCALING.md round 8; pairs identical at every step):
 
     1. stage the SIGNATURES, not the exploded postings — the r7 plan
        checkpointed post-explode (4 rows/doc each duplicating the
@@ -342,15 +345,12 @@ def q_dedup_simhash(
        BARRIER: shingling over the raw corpus UNION (with its
        derived-text branch) measured ~4x slower than over post-shuffle
        storage columns — routing provides the barrier for free;
-    3. fold choice: with 1-2 in place the folds are WITHIN NOISE at
-       fixture doc lengths (~30 words — the Arrow transfer of the hash
-       arrays offsets what the batch-numpy majority saves), so the
-       default stays the all-JVM aggregate (no Python workers in the
-       oracled query); ``jvm_fold=False`` runs
-       ``make_simhash_blocks_arrow`` (blocks BIT-IDENTICAL, tested) —
-       the fold for long-document corpora, where the interpreted
-       per-element work grows with shingles/doc while transfer is the
-       same bytes either way."""
+    3. fold choice: with 1-2 in place a bit-identical Arrow fold of the
+       two md5 hash arrays measured WITHIN NOISE of the all-JVM
+       aggregate at fixture doc lengths (~30 words — the Arrow transfer
+       of the hash arrays offsets what the batch-numpy majority saves),
+       so the fold is the JVM aggregate (no Python workers in the
+       oracled query)."""
     def sig_of_sh(sh: DataFrame) -> DataFrame:
         # repartition = materialization BARRIER: without it
         # CollapseProject inlines the md5 transform into all 64
@@ -370,22 +370,18 @@ def q_dedup_simhash(
             D.feature_hashes(F.col("sh"), 0).alias("h0"),
             D.feature_hashes(F.col("sh"), 1).alias("h1"),
         ).repartition("doc_id")
-        fold = (
-            D.simhash64_blocks(F.col("h0"), F.col("h1"))
-            if jvm_fold
-            else D.make_simhash_blocks_arrow()(F.col("h0"), F.col("h1"))
-        )
         return hashed.select(
-            "doc_id", fold.alias("blocks"), F.size("h0").alias("_nsh")
+            "doc_id",
+            D.simhash64_blocks(F.col("h0"), F.col("h1")).alias("blocks"),
+            F.size("h0").alias("_nsh"),
         )
 
-    return _simhash_query(spark, sf_dir, sig_of_sh, minblock, routed)
+    return _simhash_query(spark, sf_dir, sig_of_sh, routed)
 
 
 def q_dedup_simhash_fast(
     spark: SparkSession,
     sf_dir: str,
-    minblock: bool = True,
     routed: bool = True,
 ) -> DataFrame:
     """Production-hash SimHash (r8): ONE xxhash64 per shingle carrying
@@ -400,9 +396,18 @@ def q_dedup_simhash_fast(
 
     def sig_of_sh(sh: DataFrame) -> DataFrame:
         # no filter below the stage (r16) — see the md5 family's note:
-        # the exclusion rides the staged `_nsh` column instead
+        # the exclusion rides the staged `_nsh` column instead. The
+        # Arrow fold calls len() on every hash array, so `h` must never
+        # be NULL: `shingles` maps a NULL text to an empty array today,
+        # and the coalesce keeps that contract local (a NULL-text
+        # document folds to zero blocks and drops above the cut at
+        # _nsh = 0). It also types `h` non-nullable, which lets the
+        # optimizer drop the isnotnull(_nsh) check above the cut.
         hashed = sh.select(
-            "doc_id", D.feature_hashes_fast(F.col("sh")).alias("h")
+            "doc_id",
+            F.coalesce(
+                D.feature_hashes_fast(F.col("sh")), F.array().cast("array<bigint>")
+            ).alias("h"),
         ).repartition("doc_id")
         return hashed.select(
             "doc_id",
@@ -410,11 +415,11 @@ def q_dedup_simhash_fast(
             F.size("h").alias("_nsh"),
         )
 
-    return _simhash_query(spark, sf_dir, sig_of_sh, minblock, routed)
+    return _simhash_query(spark, sf_dir, sig_of_sh, routed)
 
 
 def _simhash_query(
-    spark: SparkSession, sf_dir: str, sig_of_sh, minblock: bool, routed: bool
+    spark: SparkSession, sf_dir: str, sig_of_sh, routed: bool
 ) -> DataFrame:
     """Shared scaffold of both SimHash families (review finding, r8 —
     only the shingle->signature step differs): corpus, optional
@@ -441,7 +446,7 @@ def _simhash_query(
         .filter(F.col("_nsh") > 0)
         .select("doc_id", "blocks")
     )
-    pairs = _simhash_pairs_from_sigs(sigs, minblock)
+    pairs = _simhash_pairs_from_sigs(sigs)
     return _simhash_route_fanout(pairs, mem, sigs) if routed else pairs
 
 
@@ -480,7 +485,7 @@ def _simhash_route_fanout(
     return cross.unionByName(intra)
 
 
-def _simhash_pairs_from_sigs(sigs: DataFrame, minblock: bool) -> DataFrame:
+def _simhash_pairs_from_sigs(sigs: DataFrame) -> DataFrame:
     """Shared LSH + verify downstream of both SimHash families:
     pigeonhole block join, min-block emission, exact hamming.
     ``sigs`` must arrive STAGED (callers stage() it): the explode
@@ -501,22 +506,22 @@ def _simhash_pairs_from_sigs(sigs: DataFrame, minblock: bool) -> DataFrame:
         F.zip_with(F.col("a.blocks"), F.col("b.blocks"), lambda x, y: x == y),
         F.lit(True),
     )
-    joined = exploded.alias("a").join(
-        exploded.alias("b"),
-        (F.col("a.block_id") == F.col("b.block_id"))
-        & (F.col("a.block_val") == F.col("b.block_val"))
-        & (F.col("a.doc_id") < F.col("b.doc_id")),
+    pairs = (
+        exploded.alias("a")
+        .join(
+            exploded.alias("b"),
+            (F.col("a.block_id") == F.col("b.block_id"))
+            & (F.col("a.block_val") == F.col("b.block_val"))
+            & (F.col("a.doc_id") < F.col("b.doc_id")),
+        )
+        .where(first_collision == F.col("a.block_id") + 1)
+        .select(
+            F.col("a.doc_id").alias("id_a"),
+            F.col("b.doc_id").alias("id_b"),
+            F.col("a.blocks").alias("blocks_a"),
+            F.col("b.blocks").alias("blocks_b"),
+        )
     )
-    if minblock:
-        joined = joined.where(first_collision == F.col("a.block_id") + 1)
-    pairs = joined.select(
-        F.col("a.doc_id").alias("id_a"),
-        F.col("b.doc_id").alias("id_b"),
-        F.col("a.blocks").alias("blocks_a"),
-        F.col("b.blocks").alias("blocks_b"),
-    )
-    if not minblock:  # pre-r8 reference plan for the A/B + equivalence
-        pairs = pairs.distinct()
     return pairs.select(
         "id_a",
         "id_b",

@@ -191,22 +191,6 @@ QUERIES = {
     "q_sim_ivf_layout_topk": q_sim_ivf_layout_topk,
 }
 
-def q_sim_ivf_topk_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF with Arrow-vectorized cosine in BOTH per-pair passes (corpus
-    bucket assignment + candidate scoring): identical probe pipeline
-    and the same oracle, each pass one numpy kernel per Arrow batch
-    instead of the interpreted JVM fold. Measured at sf1: 16.3 s ->
-    9.7 s; the remainder is centroid training, which stays on the
-    decimal-exact JVM path ON PURPOSE — that is what lets the DuckDB
-    oracle reproduce the trained centroids bit-for-bit."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    seeds = emb.filter(F.col("vec_id") < N_CENTROIDS)
-    trained = S.refine_centroids(emb, seeds)
-    queries = emb.filter(F.col("vec_id") % QUERY_MOD == 0)
-    return S.ivf_topk(
-        emb, trained, queries, k=TOP_K, nprobe=N_PROBE, scorer="arrow"
-    )
-
 
 def q_embed_l2_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding-prep representative (operators/embed_prep.py): L2
@@ -262,12 +246,11 @@ EXTRA_QUERIES = {
     # are eigen-based and not SQL-expressible — invariant-tested in
     # tests/test_embed_prep.py)
     "q_embed_l2_normalize": q_embed_l2_normalize,
-    # all-JVM IVF twins of registered q_sim_ivf_layout_topk (same
+    # all-JVM IVF twin of registered q_sim_ivf_layout_topk (same
     # oracle): the in-query pair-join probe (proven non-viable at sf10
-    # vs an exact scan — scripts/ab_ivf_layout.py) and its Arrow-scored
-    # variant, kept as the decimal/JVM cross-checks of the family
+    # vs an exact scan — scripts/ab_ivf_layout.py), kept as the
+    # decimal/JVM cross-check of the family
     "q_sim_ivf_topk": q_sim_ivf_topk,
-    "q_sim_ivf_topk_arrow": q_sim_ivf_topk_arrow,
 }
 
 _COS_CQ = S.cosine_sql("c.embedding", "q.qvec")
@@ -370,11 +353,10 @@ GROUP BY label
 }
 
 # matmul twin shares the brute-force oracle verbatim (same exact
-# semantics, different physical shape); the IVF variants (registered
-# layout probe + the JVM/Arrow in-query twins) all share one oracle
+# semantics, different physical shape); the registered layout probe
+# shares the oracle of its in-query JVM twin
 ORACLES["q_sim_topk_matmul"] = ORACLES["q_sim_bruteforce_topk"]
 ORACLES["q_sim_ivf_layout_topk"] = ORACLES["q_sim_ivf_topk"]
-ORACLES["q_sim_ivf_topk_arrow"] = ORACLES["q_sim_ivf_topk"]
 
 from ..operators.embed_prep import l2_normalize_sql as _l2_sql  # noqa: E402
 from ..functions.portable import dsum_sql as _dsum_sql  # noqa: E402

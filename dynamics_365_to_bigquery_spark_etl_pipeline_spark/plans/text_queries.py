@@ -859,11 +859,11 @@ def q_text_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # fanned defaultParallelism Python-worker tasks doing nothing (two
     # ~6 s-of-task-time stages at 0.2 s CPU in the profile). A VALUES
     # literal is a pure-JVM LocalRelation: zero tasks, no Python
-    # boundary, same rows (strings ride the shared SQL escaper).
+    # boundary, same rows (strings ride the Spark SQL escaper).
     qraw = spark.sql(
         "SELECT query_id, qtext FROM VALUES "
         + ", ".join(
-            f"({X._sql_quote(qid)}, {X._sql_quote(q)})"
+            f"({X._spark_sql_quote(qid)}, {X._spark_sql_quote(q)})"
             for qid, q in BM25_QUERIES
         )
         + " AS t(query_id, qtext)"
@@ -1424,7 +1424,7 @@ def q_bpe_encode_oov(spark: SparkSession, sf_dir: str) -> DataFrame:
             # every scan spins Python workers (see the bm25 qraw note)
             spark.sql(
                 "SELECT word FROM VALUES "
-                + ", ".join(f"({X._sql_quote(w)})" for w in OOV_PROBE_WORDS)
+                + ", ".join(f"({X._spark_sql_quote(w)})" for w in OOV_PROBE_WORDS)
                 + " AS t(word)"
             )
         )

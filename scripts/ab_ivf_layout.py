@@ -63,7 +63,7 @@ def main() -> None:
         # ---- build (once): sample-train + assign + partitioned write
         t0 = time.perf_counter()
         seeds = emb.filter(F.col("vec_id") < n_cent)
-        cents = S.refine_centroids(emb.sample(0.1, seed=42), seeds, scorer="arrow")
+        cents = S.refine_centroids(emb.sample(0.1, seed=42), seeds)
         cents = cents.localCheckpoint()
         layout = os.path.join(work, "ivf")
         S.build_ivf_layout(emb, cents, layout, scorer="matmul")

@@ -8,7 +8,7 @@ on replicated corpora.
 Families (each leg prints wall + pairs + hashsum):
 - grid embedding: ``grid_near_dup_pairs`` vs ``grid_near_dup_pairs_deduped``
   over the injected-dup corpus (the registered query's shape)
-- minhash fast: ``_minhash_pairs(minband=True)`` routed pipeline vs the
+- minhash fast: ``_minhash_pairs`` routed pipeline vs the
   same pipeline with routing DISABLED (clones enter banding directly)
 - semantic JVM: ``_semantic_jvm_pairs_raw`` vs routed ``q_dedup_semantic``
 
@@ -123,7 +123,7 @@ def main() -> None:
 
     # r10 verdict #5 retrofit: the per-leg rep loop above used to run
     # each leg's reps back to back — on this drifting host, sequential
-    # arms flatter whichever ran later (the ab_stage_backend run-1/run-2
+    # arms flatter whichever ran later (the staging-backend run-1/run-2
     # contrast, SCALING.md). One untimed warm-up cycle + per-cycle
     # interleaving lands drift on every leg equally.
     timings, last = ab_lib.warmup_interleaved(
@@ -147,9 +147,9 @@ def main() -> None:
 
 def _minhash_pairs_unrouted(spark, sf_dir):
     """The pre-r7 shape: banding over the FULL corpus, no exact-dedup
-    pre-pass (kept here, not in the package — the package's raw twin is
-    `minband=False`, which still routes). Reproduces the original
-    full-corpus pipeline the r7 oracle mirrors."""
+    pre-pass (kept here, not in the package, which only has the routed
+    pipeline). Reproduces the original full-corpus pipeline the r7
+    oracle mirrors."""
     from dynamics_365_to_bigquery_spark_etl_pipeline_spark.operators import (
         dedup as D,
     )

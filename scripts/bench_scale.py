@@ -39,9 +39,9 @@ from bench import HEADLINE  # noqa: E402  (repo-root import)
 from dynamics_365_to_bigquery_spark_etl_pipeline_spark.session import get_spark  # noqa: E402
 
 # scale-path twins measured alongside the headline set: the exact
-# matmul replacement for the quadratic pair-join, and the IVF ANN path
-# (JVM-scored + Arrow-scored)
-EXTRA_SCALE = ["q_sim_topk_matmul", "q_sim_ivf_topk", "q_sim_ivf_topk_arrow"]
+# matmul replacement for the quadratic pair-join, and the in-query IVF
+# ANN path
+EXTRA_SCALE = ["q_sim_topk_matmul", "q_sim_ivf_topk"]
 
 
 def main() -> None:

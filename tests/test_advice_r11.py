@@ -49,3 +49,17 @@ def test_pii_scrub_sql_survives_quoted_pattern(monkeypatch):
 def test_sql_quote_doubles_embedded_quotes():
     assert text._sql_quote("a'b''c") == "'a''b''''c'"
     assert text._sql_quote("plain") == "'plain'"
+
+
+def test_spark_sql_quote_values_rows_equal_inputs(spark):
+    """Spark's parser reads ``\\`` as an escape inside string literals,
+    so the Spark-side quoter doubles it before the quotes: a VALUES
+    relation (the shape of the BM25 query frame and the BPE OOV probe)
+    must return every input string unchanged."""
+    words = ["o'brien\\", "c:\\new\\'dir'", "\\\\''", "plain"]
+    got = spark.sql(
+        "SELECT w FROM VALUES "
+        + ", ".join(f"({text._spark_sql_quote(w)})" for w in words)
+        + " AS t(w)"
+    ).collect()
+    assert sorted(r.w for r in got) == sorted(words)

@@ -131,12 +131,8 @@ def test_connected_components_matches_union_find(spark, edges):
     want = {(n, find(n)) for n in parent}
 
     pairs = spark.createDataFrame(edges, "id_a long, id_b long").distinct()
-    for method in ("star", "propagate"):
-        got = {
-            (r.id, r.group_id)
-            for r in connected_components(pairs, method=method).collect()
-        }
-        assert got == want, method
+    got = {(r.id, r.group_id) for r in connected_components(pairs).collect()}
+    assert got == want
 
 
 @given(

@@ -7,8 +7,11 @@
   inferred-filter pushdown trap it exists to prevent).
 - the md5-family ``_minhash_parts`` session share: two fast=False calls
   in one session return the SAME staged frames; fast=True never shares
-  (the bench-timed row must re-execute per rep).
-- ``catalog.kernel_spread`` fires only on split-starved inputs.
+  (the bench-timed row must re-execute per rep); a rewritten documents
+  table misses the memo, and concurrent first callers share one build.
+- ``catalog.kernel_spread`` fires only on split-starved inputs, and
+  ``catalog.scan_splits`` sizes a directory-layout table by its part
+  files.
 - the simhash staged subtree no longer evaluates the shingle chain
   inside a pushed Filter (ADVICE r15 #1).
 - the IVF centroid cache key rides the meta token: a centroid rewrite
@@ -129,6 +132,70 @@ def test_md5_parts_memo_values_equal_fresh_build(spark, sf_dir):
     )
 
 
+def test_md5_parts_memo_misses_after_data_change(spark, tmp_path):
+    """The memo key carries a token of the documents file, so a table
+    rewritten under the same directory is rebuilt, not served stale,
+    and the directory's older entry is evicted."""
+    import os
+    import shutil
+
+    import pyarrow.parquet as pq
+
+    from dynamics_365_to_bigquery_spark_etl_pipeline_spark.plans import (
+        dedup_queries as DQ,
+    )
+
+    path = str(tmp_path)
+    shutil.copy(f"{SF_DIR}/documents.parquet", tmp_path / "documents.parquet")
+    a = DQ._minhash_parts(spark, path, fast=False)
+    assert DQ._minhash_parts(spark, path, fast=False)[0] is a[0]
+
+    docs = pq.read_table(tmp_path / "documents.parquet")
+    pq.write_table(docs.slice(0, docs.num_rows // 2), tmp_path / "documents.parquet")
+    b = DQ._minhash_parts(spark, path, fast=False)
+    assert b[0] is not a[0], "a rewritten documents table must miss the memo"
+    keys = [k for k in DQ._MD5_PARTS_MEMO[spark] if k[0] == os.path.abspath(path)]
+    assert len(keys) == 1
+
+
+def test_md5_parts_memo_builds_once_under_concurrency(spark, tmp_path, monkeypatch):
+    """Concurrent first callers share ONE build: each independent build
+    would stage, and later execute, its own copy of the pipeline."""
+    import shutil
+    import threading
+    import time
+    from concurrent.futures import ThreadPoolExecutor
+
+    from dynamics_365_to_bigquery_spark_etl_pipeline_spark.plans import (
+        dedup_queries as DQ,
+    )
+
+    shutil.copy(f"{SF_DIR}/documents.parquet", tmp_path / "documents.parquet")
+    real_build = DQ._minhash_parts_build
+    builds, second_build = [], threading.Event()
+
+    def slow_build(*args):
+        builds.append(args)
+        if len(builds) == 1:
+            # hold the first build open: a second caller that misses the
+            # memo starts its own build inside this window
+            second_build.wait(timeout=2)
+        else:
+            second_build.set()
+        return real_build(*args)
+
+    monkeypatch.setattr(DQ, "_minhash_parts_build", slow_build)
+    path = str(tmp_path)
+    with ThreadPoolExecutor(2) as pool:
+        first = pool.submit(DQ._minhash_parts, spark, path, False)
+        while not builds:
+            time.sleep(0.01)
+        second = pool.submit(DQ._minhash_parts, spark, path, False)
+        a, b = first.result(timeout=120), second.result(timeout=120)
+    assert len(builds) == 1
+    assert a[0] is b[0] and a[1] is b[1]
+
+
 def test_kernel_spread_conditioned(spark, sf_dir):
     from dynamics_365_to_bigquery_spark_etl_pipeline_spark.catalog import (
         kernel_spread,
@@ -148,6 +215,30 @@ def test_kernel_spread_conditioned(spark, sf_dir):
     try:
         assert scan_splits(spark, sf_dir, "documents") > par
         assert kernel_spread(spark, sf_dir, "documents") is None
+    finally:
+        spark.conf.unset("spark.sql.files.maxPartitionBytes")
+
+
+def test_scan_splits_sums_directory_part_files(spark, tmp_path):
+    """A directory-layout table is sized by its part files, not by the
+    directory entry (which read as one split whatever the data)."""
+    import math
+    import os
+
+    from dynamics_365_to_bigquery_spark_etl_pipeline_spark.catalog import (
+        scan_splits,
+    )
+
+    out = str(tmp_path / "documents.parquet")
+    spark.range(0, 20000).repartition(4).write.parquet(out)
+    parts = [f for f in os.listdir(out) if f.startswith("part-")]
+    assert len(parts) == 4
+    total = sum(os.path.getsize(os.path.join(out, f)) for f in parts)
+    spark.conf.set("spark.sql.files.maxPartitionBytes", "4096")
+    try:
+        assert scan_splits(spark, str(tmp_path), "documents") == math.ceil(
+            total / 4096
+        ) > 4
     finally:
         spark.conf.unset("spark.sql.files.maxPartitionBytes")
 

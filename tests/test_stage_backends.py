@@ -3,7 +3,7 @@
 ``lazy_stage``'s localCheckpoint blocks are executor-pinned and
 non-fault-tolerant; the r9 verdict's top item asked for the documented
 100 TB alternative: staged partitions on the shared filesystem, behind
-the same API, chosen per call site by a knob. These tests pin the three
+the same API, chosen by a deployment setting. These tests pin the three
 contracts:
 
 1. ``durable_stage`` is construction-LAZY (zero jobs — registry
@@ -11,8 +11,8 @@ contracts:
    to the session checkpoint directory on first action;
 2. every backend is result-EQUIVALENT to the unstaged plan, with
    multiple consumers reusing one materialization;
-3. the ``stage`` dispatcher honors the explicit arg, the env knob, and
-   fails loudly on unknown backends.
+3. the ``stage`` dispatcher honors the env setting and fails loudly on
+   unknown backends.
 """
 
 from __future__ import annotations
@@ -104,41 +104,17 @@ def test_durable_stage_writes_checkpoint_files_and_reuses_them(spark):
     assert not (second_files - after_files)
 
 
-@pytest.mark.parametrize("backend", ["local", "local_disk", "durable", "parquet"])
-def test_backends_are_result_equivalent(spark, backend):
+@pytest.mark.parametrize("backend", ["local", "durable"])
+def test_backends_are_result_equivalent(spark, backend, monkeypatch):
+    monkeypatch.setenv(ST.BACKEND_ENV, backend)
     sub = _subtree(spark)
-    staged = ST.stage(sub, backend=backend)
+    staged = ST.stage(sub)
     assert {tuple(r) for r in staged.collect()} == _expected(spark)
     # two further consumers of the SAME staged frame agree
     assert staged.count() == 37
     assert (
         staged.agg(F.sum("s")).collect()[0][0]
         == sum(s for _g, s, _n in _expected(spark))
-    )
-
-
-def test_lazy_stage_disk_only_storage_level(spark):
-    """The middle arm of the sf10 A/B: localCheckpoint blocks at
-    DISK_ONLY — still executor-pinned, but out of block-manager memory
-    (separates the memory-pressure variable from durability)."""
-    sub = _subtree(spark)
-    staged = ST.lazy_stage(sub, storage_level="DISK_ONLY")
-    assert {tuple(r) for r in staged.collect()} == _expected(spark)
-
-
-def test_parquet_stage_is_eager_and_columnar(spark):
-    sub = _subtree(spark)
-    before = _jobs_started(spark)
-    staged = ST.parquet_stage(sub)
-    assert _jobs_started(spark) - before >= 1, (
-        "parquet_stage is documented EAGER — the write job runs at call"
-    )
-    assert {tuple(r) for r in staged.collect()} == _expected(spark)
-    # the read-back is a parquet scan: column pruning is available to
-    # consumers (the reason this backend exists beside checkpoint files)
-    explained = staged.select("g")._jdf.queryExecution().executedPlan().toString()
-    assert "ReadSchema: struct<g:" in explained, (
-        "parquet read-back must prune to the selected column"
     )
 
 
@@ -151,22 +127,18 @@ def test_stage_dispatcher_env_knob(spark, monkeypatch):
     monkeypatch.setenv(ST.BACKEND_ENV, "durable")
     ST.stage(sub)
     assert len(calls) == 1, "env knob must route to the durable backend"
-    # explicit arg beats env
-    monkeypatch.setenv(ST.BACKEND_ENV, "parquet")
-    ST.stage(sub, backend="durable")
-    assert len(calls) == 2
+    monkeypatch.setenv(ST.BACKEND_ENV, "bogus")
     with pytest.raises(ValueError, match="unknown stage backend"):
-        ST.stage(sub, backend="bogus")
+        ST.stage(sub)
 
 
 def test_env_knob_rejects_eager_parquet_backend(spark, monkeypatch):
     """$SPARK_GRAFT_STAGE_BACKEND only selects LAZY backends: stage()
-    sits inside registry query functions, where an env-selected eager
-    backend would run full pipelines at plan-construction time (the r7
-    trap). Explicit backend='parquet' at a call site stays allowed."""
+    sits inside registry query functions, where an eager backend would
+    run full pipelines at plan-construction time (the r7 trap)."""
+    sub = _subtree(spark)
     monkeypatch.setenv(ST.BACKEND_ENV, "parquet")
-    with pytest.raises(ValueError, match="not allowed"):
-        ST.stage(_subtree(spark))
-    # explicit arg wins over the env and is allowed to be eager
-    staged = ST.stage(_subtree(spark), backend="parquet")
-    assert {tuple(r) for r in staged.collect()} == _expected(spark)
+    before = _jobs_started(spark)
+    with pytest.raises(ValueError, match="unknown stage backend"):
+        ST.stage(sub)
+    assert _jobs_started(spark) == before

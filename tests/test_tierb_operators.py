@@ -13,6 +13,8 @@ from dynamics_365_to_bigquery_spark_etl_pipeline_spark.operators import dedup as
 from dynamics_365_to_bigquery_spark_etl_pipeline_spark.operators import similarity as S
 from dynamics_365_to_bigquery_spark_etl_pipeline_spark.operators import text as X
 
+from .conftest import SF_SMOKE
+
 
 def _one(spark, col):
     return spark.range(1).select(col.alias("v")).first().v
@@ -238,11 +240,11 @@ def test_connected_components_star_closes_long_chains_in_log_rounds(spark):
     """r8 verdict #3: min-label propagation pays O(graph diameter)
     rounds of full shuffles plus a driver count per round — a planted
     64-link chain (the worst case for propagation: the min label
-    travels ONE hop per round) needs ~64 propagate rounds, while the
+    travels ONE hop per round) needs ~64 rounds that way, while the
     alternating large-star/small-star contraction closes it in
-    O(log n). Both must produce identical labels; the measured
-    round-count drop at chain length 1000 is recorded in SCALING.md
-    (scripts/ab_star_cc.py)."""
+    O(log n). The measured round-count drop at chain length 1000 (11
+    star rounds against 1001 propagation rounds) is recorded in
+    SCALING.md."""
     n = 64
     # the component min (0) sits at one END of the chain, so its label
     # must travel all n hops — propagation's slowest configuration
@@ -251,22 +253,15 @@ def test_connected_components_star_closes_long_chains_in_log_rounds(spark):
     )
     star = {
         (r.id, r.group_id)
-        for r in D.connected_components(chain, method="star").collect()
+        for r in D.connected_components(chain).collect()
     }
     star_rounds = D.LAST_CC_ROUNDS["star"]
     assert star == {(i, 0) for i in range(n + 1)}
     assert star_rounds <= 12, star_rounds  # ~2*log2(64)+slack, NOT ~64
 
-    prop = {
-        (r.id, r.group_id)
-        for r in D.connected_components(chain, method="propagate").collect()
-    }
-    assert prop == star
-    assert D.LAST_CC_ROUNDS["propagate"] >= n / 2  # the contrast being fixed
-
-    # the safety valve keeps its fail-loud contract on the star path too
+    # the safety valve keeps its fail-loud contract
     with pytest.raises(RuntimeError, match="did not converge"):
-        D.connected_components(chain, method="star", max_iters=2).collect()
+        D.connected_components(chain, max_iters=2).collect()
 
 
 def test_sample_frames_windows_and_decoder_injection(spark):
@@ -480,47 +475,33 @@ def test_hll_sliding_from_merged_hourly_sketches(spark):
 def test_simhash_arrow_fold_bit_identical_to_jvm(spark):
     """r8: the Arrow-vectorized majority fold must produce BIT-IDENTICAL
     block arrays to the JVM aggregate fold over the full fixture corpus
-    (same JVM-computed hash inputs — pure integer majority both ways),
-    and therefore an identical pair set end to end."""
-    from pyspark.sql import functions as F
-
-    from dynamics_365_to_bigquery_spark_etl_pipeline_spark.operators import dedup as D
+    (pure integer majority both ways). The fast family's ONE 64-bit hash
+    per shingle folds exactly as the JVM two-array fold over its low
+    and high 32 bits."""
     from dynamics_365_to_bigquery_spark_etl_pipeline_spark.plans.dedup_queries import (
         _corpus,
-        q_dedup_simhash,
     )
 
-    sf = "/root/testdata/sf0.001"
-    corpus = _corpus(spark, sf)
+    corpus = _corpus(spark, SF_SMOKE)
     hashed = corpus.select(
-        "doc_id",
-        D.feature_hashes(D.shingles(F.col("text")), 0).alias("h0"),
-        D.feature_hashes(D.shingles(F.col("text")), 1).alias("h1"),
-    ).filter(F.size("h0") > 0)
+        "doc_id", D.feature_hashes_fast(D.shingles(F.col("text"))).alias("h")
+    ).filter(F.size("h") > 0)
     jvm = {
         r.doc_id: r.blocks
         for r in hashed.select(
-            "doc_id", D.simhash64_blocks(F.col("h0"), F.col("h1")).alias("blocks")
+            "doc_id",
+            D.simhash64_blocks(
+                F.col("h"), F.transform("h", lambda x: F.shiftright(x, 32))
+            ).alias("blocks"),
         ).collect()
     }
     arrow = {
         r.doc_id: r.blocks
         for r in hashed.select(
-            "doc_id",
-            D.make_simhash_blocks_arrow()(F.col("h0"), F.col("h1")).alias("blocks"),
+            "doc_id", D.make_simhash_blocks64_arrow()(F.col("h")).alias("blocks")
         ).collect()
     }
     assert arrow == jvm and len(jvm) > 100
-
-    want = {
-        (r.id_a, r.id_b, r.hamming)
-        for r in q_dedup_simhash(spark, sf, jvm_fold=True).collect()
-    }
-    got = {
-        (r.id_a, r.id_b, r.hamming)
-        for r in q_dedup_simhash(spark, sf, jvm_fold=False).collect()
-    }
-    assert got == want and len(want) > 0
 
 
 def test_simhash_fast_family_agreement(spark):
@@ -599,59 +580,60 @@ def test_simhash_routed_equals_raw_both_families(spark):
         assert set(routed) == raw and len(raw) > 0
 
 
-def test_simhash_arrow_folds_handle_empty_rows(spark):
+def test_simhash_arrow_folds_handle_empty_rows(spark, monkeypatch):
     """Review finding (r8): np.add.reduceat mis-segments around empty
     hash arrays — a TRAILING empty row crashed (start == total), and a
     mid-batch empty row could truncate its neighbor's segment under a
-    naive clip. Both folds must match the JVM fold on non-empty rows
-    and yield all-zero blocks for empty rows, wherever they sit in the
-    batch."""
+    naive clip. The 64-bit Arrow fold must yield exact majorities on
+    non-empty rows and all-zero blocks for empty rows, wherever they
+    sit in the batch; and a NULL-text document must reach it as an
+    empty array (not crash on len(None)) and drop out of the fast
+    SimHash family like any other empty-shingle document."""
     from pyspark.sql import functions as F
 
     from dynamics_365_to_bigquery_spark_etl_pipeline_spark.operators import dedup as D
+    from dynamics_365_to_bigquery_spark_etl_pipeline_spark.plans import (
+        dedup_queries as DQ,
+    )
 
     # one partition so batch layout (incl. the trailing empty) is fixed
     df = spark.createDataFrame(
         [
-            (1, [123], [5]),
-            (2, [], []),        # mid-batch empty
-            (3, [7, 9], [1, 3]),
-            (4, [], []),        # trailing empty (the crash repro)
+            (1, [123]),
+            (2, []),        # mid-batch empty
+            (3, [7, 9]),
+            (4, [-1, -1, 0]),
+            (5, []),        # trailing empty (the crash repro)
         ],
-        "id long, h0 array<long>, h1 array<long>",
+        "id long, h array<long>",
     ).coalesce(1)
-    arrow = {
-        r.id: r.blocks
-        for r in df.select(
-            "id",
-            D.make_simhash_blocks_arrow()(F.col("h0"), F.col("h1")).alias(
-                "blocks"
-            ),
-        ).collect()
-    }
-    jvm = {
-        r.id: r.blocks
-        for r in df.filter(F.size("h0") > 0)
-        .select(
-            "id", D.simhash64_blocks(F.col("h0"), F.col("h1")).alias("blocks")
-        )
-        .collect()
-    }
-    assert arrow[1] == jvm[1] and arrow[3] == jvm[3]
-    assert arrow[2] == [0, 0, 0, 0] and arrow[4] == [0, 0, 0, 0]
-
     b64 = {
         r.id: r.blocks
         for r in df.select(
-            "id", D.make_simhash_blocks64_arrow()(F.col("h0")).alias("blocks")
+            "id", D.make_simhash_blocks64_arrow()(F.col("h")).alias("blocks")
         ).collect()
     }
+    assert b64[1] == [123, 0, 0, 0]  # a single hash is its own majority
     assert b64[3] == [7 & 9, 0, 0, 0]  # majority of 2 = both bits set
-    assert b64[2] == [0, 0, 0, 0] and b64[4] == [0, 0, 0, 0]
+    assert b64[4] == [0xFFFF] * 4  # 2 of 3 hashes set every bit
+    assert b64[2] == [0, 0, 0, 0] and b64[5] == [0, 0, 0, 0]
+
+    # NULL text through the production fast-family pipeline
+    real_corpus = DQ._corpus
+    null_id = 3_000_000
+
+    def corpus_with_null(spark_, sf_dir):
+        return real_corpus(spark_, sf_dir).unionByName(
+            spark_.createDataFrame([(null_id, None)], "doc_id long, text string")
+        )
+
+    monkeypatch.setattr(DQ, "_corpus", corpus_with_null)
+    rows = DQ.q_dedup_simhash_fast(spark, SF_SMOKE).collect()
+    assert rows
+    assert all(null_id not in (r.id_a, r.id_b) for r in rows)
 
 
-@pytest.mark.parametrize("method", ["star", "propagate"])
-def test_connected_components_durable_cut_equivalent(spark, method, monkeypatch, tmp_path):
+def test_connected_components_durable_cut_equivalent(spark, monkeypatch, tmp_path):
     """durable=True routes every round's lineage cut through Spark's
     RELIABLE checkpoint (files on the checkpoint FS — executor-loss
     resilience for long iterative runs) with labels identical to the
@@ -678,7 +660,7 @@ def test_connected_components_durable_cut_equivalent(spark, method, monkeypatch,
     )
     durable = {
         (r.id, r.group_id)
-        for r in D.connected_components(chain, method=method, durable=True).collect()
+        for r in D.connected_components(chain, durable=True).collect()
     }
     # check file presence IMMEDIATELY: cleanCheckpoints=true (session
     # conf) lets the ContextCleaner delete rdd-* dirs once the round
@@ -687,7 +669,7 @@ def test_connected_components_durable_cut_equivalent(spark, method, monkeypatch,
     assert new_dirs, "durable=True must write reliable-checkpoint RDD dirs"
     default = {
         (r.id, r.group_id)
-        for r in D.connected_components(chain, method=method).collect()
+        for r in D.connected_components(chain).collect()
     }
     assert durable == default
     assert {(i, 0) for i in range(21)} <= durable
