@@ -331,6 +331,53 @@ def exact_text_dedup(
     return reps, mem
 
 
+def fan_out_clones(
+    rep_pairs: DataFrame,
+    mem: DataFrame,
+    member: str,
+    intra: dict[str, Column],
+    gate: DataFrame | None = None,
+) -> DataFrame:
+    """Fan representative pairs out to member pairs: the last step of
+    the routing law every routed near-dup operator follows (collapse
+    exact clones, run the kernel on representatives, fan out).
+
+    ``rep_pairs`` is ``(id_a, id_b, *carry)`` over representative ids;
+    ``mem`` maps each ``_rid`` to its members in column ``member`` (a
+    rep is a member of its own group). Clones share whatever the kernel
+    compared, so a member pair's carry IS its rep pair's. Emits
+    ``(id_a, id_b, *carry)`` with id_a < id_b, linear in the output:
+
+    - cross pairs: each rep pair joined to both member lists on
+      ``_rid``, ids ordered by least/greatest;
+    - intra-clone pairs: one member self-join on ``_rid``, carry column
+      ``c`` valued ``intra[c]``, a literal or a column of ``gate``.
+      ``gate``, keyed on the unique ``_rid``, also keeps only the clone
+      groups it lists (the kernel's verdict on two identical inputs)."""
+    carry = [c for c in rep_pairs.columns if c not in ("id_a", "id_b")]
+    ma = mem.select(F.col("_rid").alias("id_a"), F.col(member).alias("_ma"))
+    mb = mem.select(F.col("_rid").alias("id_b"), F.col(member).alias("_mb"))
+    cross = (
+        rep_pairs.join(ma, "id_a")
+        .join(mb, "id_b")
+        .select(
+            F.least("_ma", "_mb").alias("id_a"),
+            F.greatest("_ma", "_mb").alias("id_b"),
+            *carry,
+        )
+    )
+    x, y = mem.alias("x"), mem.alias("y")
+    same = x.join(y, "_rid").where(F.col(f"x.{member}") < F.col(f"y.{member}"))
+    if gate is not None:
+        same = same.join(gate, "_rid")
+    clones = same.select(
+        F.col(f"x.{member}").alias("id_a"),
+        F.col(f"y.{member}").alias("id_b"),
+        *[intra[c].alias(c) for c in carry],
+    )
+    return cross.unionByName(clones)
+
+
 def feature_hashes_fast(features: Column) -> Column:
     """xxhash64 per feature — the at-scale hash family for the fast
     SimHash path (one native 64-bit hash per shingle instead of two

@@ -37,6 +37,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from .dedup import connected_components, fan_out_clones
+
 
 def deletion_variants(s: Column) -> Column:
     """Array of the depth-1 deletion neighborhood of ``s``: element 0 is
@@ -164,10 +166,10 @@ def fuzzy_join_deduped(
     2. run the deletion-variant fuzzy join over representatives only —
        the O(L^d) key explosion and the candidate verification now pay
        |distinct strings|, not |rows|;
-    3. fan results back out: every (rep_a, rep_b, dist>=1) pair expands
-       to all member cross pairs via two equi-joins (output-linear),
-       and exact-duplicate groups contribute their intra-group dist-0
-       pairs via one string-keyed self-join (also output-linear).
+    3. fan results back out through ``dedup.fan_out_clones``: clones
+       share a string, so a member pair's dist is its rep pair's, and
+       exact-duplicate groups contribute their intra-group pairs at
+       dist 0.
 
     Where it wins: replication-heavy data (CDC landing zones, cloned
     benchmark corpora). The sf1 fixture clones every supplier name 10x
@@ -175,8 +177,7 @@ def fuzzy_join_deduped(
     rows and the d=2 variant keys shrink 10x — measured 292.9 s ->
     48.3 s (6.1x) at sf1 d=2, identical 14,269,500-pair set by count +
     hashsum (SCALING.md round-7 section). Where it doesn't: all-unique
-    strings
-    (reps == rows; the detour adds two cheap equi-joins). The dist-0
+    strings (reps == rows; the detour adds two cheap equi-joins). The dist-0
     convention matches ``fuzzy_join``: equal strings ARE emitted as
     pairs with dist 0."""
     base = df.select(
@@ -192,28 +193,7 @@ def fuzzy_join_deduped(
         reps, "_rid", "_fs", max_dist, spread=spread
     )  # dist >= 1 only
 
-    ma = mem.select(F.col("_rid").alias("id_a"), F.col("_fid").alias("_ma"))
-    mb = mem.select(F.col("_rid").alias("id_b"), F.col("_fid").alias("_mb"))
-    cross = (
-        rep_pairs.join(ma, "id_a")
-        .join(mb, "id_b")
-        .select(
-            F.least("_ma", "_mb").alias("id_a"),
-            F.greatest("_ma", "_mb").alias("id_b"),
-            "dist",
-        )
-    )
-    x, y = base.alias("x"), base.alias("y")
-    intra = (
-        x.join(y, "_fs")
-        .where(F.col("x._fid") < F.col("y._fid"))
-        .select(
-            F.col("x._fid").alias("id_a"),
-            F.col("y._fid").alias("id_b"),
-            F.lit(0).alias("dist"),
-        )
-    )
-    return cross.unionByName(intra)
+    return fan_out_clones(rep_pairs, mem, "_fid", {"dist": F.lit(0)})
 
 
 def resolve_entities(
@@ -238,8 +218,6 @@ def resolve_entities(
     the d<=1 graph over them is one giant component — real master data
     is sparse. The semantics are therefore pinned by planted-name unit
     tests rather than a fixture-scale oracle query."""
-    from .dedup import connected_components
-
     pairs = fuzzy_join(df, id_col, str_col, max_dist).select("id_a", "id_b")
     comps = connected_components(pairs)
     resolved = (

@@ -25,6 +25,8 @@ import pandas as pd  # module-level: pandas_udf type hints resolve here
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+from .dedup import fan_out_clones
 from .stage import stage
 
 
@@ -434,10 +436,9 @@ def grid_near_dup_pairs_deduped(
     2. run the grid candidate generation + exact-cosine verify over
        representatives only — the 3^k explode, the cell join, and the
        cosine verification all pay |distinct vectors|;
-    3. fan out: rep pairs expand to member cross pairs via two
-       equi-joins, and clone groups contribute intra-group pairs
-       directly (identical vectors have cosine 1 >= any threshold) —
-       both output-linear.
+    3. fan out through ``dedup.fan_out_clones``; clone groups emit
+       intra pairs only where the rep passes the kernel's own
+       cosine(v, v) >= threshold check (see the gate below).
 
     Measured sf1 (10x-cloned fixture + injected copies, 143,500 result
     pairs): 143.1 s -> 3.1 s (46x), identical pair set by count +
@@ -453,16 +454,6 @@ def grid_near_dup_pairs_deduped(
         n_rows=n_rows,
         dim=dim,
     )
-    ma = slim.select(F.col("_rid").alias("id_a"), F.col("_gid").alias("_ma"))
-    mb = slim.select(F.col("_rid").alias("id_b"), F.col("_gid").alias("_mb"))
-    cross = (
-        rep_pairs.join(ma, "id_a")
-        .join(mb, "id_b")
-        .select(
-            F.least("_ma", "_mb").alias("id_a"),
-            F.greatest("_ma", "_mb").alias("id_b"),
-        )
-    )
     # Intra-clone pairs go through the SAME verification the raw
     # operator applies to an identical-vector pair: cosine(v,v) is the
     # exact expression raw evaluates for two equal arrays, so a
@@ -473,14 +464,7 @@ def grid_near_dup_pairs_deduped(
     self_pass = reps.filter(
         cosine(F.col("_rv"), F.col("_rv")) >= F.lit(threshold)
     ).select("_rid")
-    x, y = slim.alias("x"), slim.alias("y")
-    intra = (
-        x.join(y, "_rid")
-        .where(F.col("x._gid") < F.col("y._gid"))
-        .join(self_pass, "_rid", "left_semi")
-        .select(F.col("x._gid").alias("id_a"), F.col("y._gid").alias("id_b"))
-    )
-    return cross.unionByName(intra)
+    return fan_out_clones(rep_pairs, slim, "_gid", {}, self_pass)
 
 
 def _make_local_topk_with_ties():
@@ -810,10 +794,10 @@ def semantic_dedup_pairs_deduped(
        reps only, with ``include_self=True`` so each rep also reports
        its own fl(cos(v, v)) under the SAME threshold filter the raw
        kernel applies to a pair of identical vectors;
-    3. fan out, output-linearly: rep pairs expand to member cross pairs
-       via two equi-joins on the member map (two longs/row — vectors
-       never shuffle again), and clone groups expand to intra pairs
-       gated + valued by their rep's diagonal row from step 2.
+    3. fan out through ``dedup.fan_out_clones`` (the member map is two
+       longs/row — vectors never shuffle again); clone groups expand to
+       intra pairs gated + valued by their rep's diagonal row from
+       step 2.
 
     Cost: the quadratic stage pays |distinct vectors| per cluster
     instead of |members|; everything after is linear in the OUTPUT.
@@ -834,37 +818,19 @@ def semantic_dedup_pairs_deduped(
     ).transform(stage)
 
     rep_pairs = rep_all.where(F.col("id_a") < F.col("id_b"))
-    ma = slim.select(F.col("_rid").alias("id_a"), F.col("_gid").alias("_ma"))
-    mb = slim.select(F.col("_rid").alias("id_b"), F.col("_gid").alias("_mb"))
-    cross = (
-        rep_pairs.join(ma, "id_a")
-        .join(mb, "id_b")
-        .select(
-            "cluster_id",
-            F.least("_ma", "_mb").alias("id_a"),
-            F.greatest("_ma", "_mb").alias("id_b"),
-            "sim",
-        )
-    )
     # intra-clone pairs: gated + valued by the rep's own diagonal row —
     # the exact float the raw kernel computes for two identical members
     # (and the exact NaN-drop on zero-norm vectors)
     self_rows = rep_all.where(F.col("id_a") == F.col("id_b")).select(
         F.col("id_a").alias("_rid"), "cluster_id", "sim"
     )
-    x, y = slim.alias("x"), slim.alias("y")
-    intra = (
-        x.join(y, "_rid")
-        .where(F.col("x._gid") < F.col("y._gid"))
-        .join(self_rows, "_rid")
-        .select(
-            "cluster_id",
-            F.col("x._gid").alias("id_a"),
-            F.col("y._gid").alias("id_b"),
-            "sim",
-        )
-    )
-    return cross.unionByName(intra)
+    return fan_out_clones(
+        rep_pairs,
+        slim,
+        "_gid",
+        {"cluster_id": F.col("cluster_id"), "sim": F.col("sim")},
+        self_rows,
+    ).select("cluster_id", "id_a", "id_b", "sim")
 
 
 def build_ivf_layout(
@@ -873,84 +839,18 @@ def build_ivf_layout(
     out: str,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    scorer: str = "jvm",
 ) -> None:
     """Persist the IVF index: corpus assigned to nearest-centroid
-    buckets and written ``partitionBy(bucket_id)``. This is the build
-    HALF of the amortization trade the in-query ``ivf_topk`` cannot
-    express: pay assignment once, then every query batch reads only its
-    probed bucket partitions (partition pruning at the scan — see
-    ``ivf_topk_from_layout`` and ``scripts/ab_ivf_layout.py`` for the
-    measured break-even). ``scorer="matmul"`` uses the argmax-kernel
-    assignment (no pair rows — the build path that actually amortizes)."""
-    assigner = (
-        assign_ivf_buckets_matmul(corpus, centroids, id_col, vec_col)
-        if scorer == "matmul"
-        else assign_ivf_buckets(corpus, centroids, id_col, vec_col)
-    )
-    assigner.write.mode("overwrite").partitionBy("bucket_id").parquet(out)
-
-
-def ivf_topk_from_layout(
-    spark,
-    layout_path: str,
-    centroids: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    nprobe: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """ANN top-k against a PERSISTED ``build_ivf_layout`` index: the
-    query batch's probe set decides which ``bucket_id=`` partitions are
-    read (an ``isin`` literal over the collected probe ids — bucket-id
-    metadata, not data, crosses the driver), so per-batch cost is
-    O(probed fraction of corpus), not O(corpus). Same probe/score/rank
-    pipeline as ``ivf_topk``, so results are identical for the same
-    centroids."""
-    q = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("qvec")
-    )
-    cent = centroids.select(
-        F.col(id_col).alias("centroid_id"), F.col(vec_col).alias("cent_vec")
-    )
-    wq = Window.partitionBy("query_id").orderBy(
-        F.col("qsim").desc(), F.col("centroid_id").asc()
-    )
-    probed = (
-        q.crossJoin(F.broadcast(cent))
-        .select(
-            "query_id",
-            "qvec",
-            "centroid_id",
-            cosine(F.col("qvec"), F.col("cent_vec")).alias("qsim"),
-        )
-        .withColumn("pr", F.row_number().over(wq))
-        .filter(F.col("pr") <= nprobe)
-        .select("query_id", "qvec", "centroid_id")
-        .localCheckpoint()  # probe set is reused for the id list + join
-    )
-    bucket_ids = [r.centroid_id for r in probed.select("centroid_id").distinct().collect()]
-    table = spark.read.parquet(layout_path).filter(
-        F.col("bucket_id").isin(bucket_ids)  # partition-pruned scan
-    )
-    cand = (
-        table.join(F.broadcast(probed), table.bucket_id == probed.centroid_id)
-        .filter(F.col(id_col) != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col(id_col).alias("neighbor_id"),
-            cosine(F.col(vec_col), F.col("qvec")).alias("sim"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        cand.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank")
-    )
+    buckets by the argmax kernel (no pair rows) and written
+    ``partitionBy(bucket_id)``. This is the build HALF of the
+    amortization trade the in-query ``ivf_topk`` cannot express: pay
+    assignment once, then every query batch reads only its probed
+    bucket partitions (partition pruning at the scan — see
+    ``matmul_topk_from_layout`` and ``scripts/ab_ivf_layout.py`` for
+    the measured break-even)."""
+    assign_ivf_buckets_matmul(corpus, centroids, id_col, vec_col).write.mode(
+        "overwrite"
+    ).partitionBy("bucket_id").parquet(out)
 
 
 def refine_centroids(

@@ -294,7 +294,7 @@ class EntityPipeline:
         entity: str,
         prepared: DataFrame,
         snapshot: DataFrame | None,
-        touched_buckets: list[int] | None = None,
+        touched_buckets: list[int] | None,
     ) -> None:
         """Bucketed sink path: full load writes every bucket; the
         incremental merge reads ONLY the delta-touched buckets
@@ -302,7 +302,9 @@ class EntityPipeline:
         partitions. ONE physical Spark write to a staging dir, then
         per-bucket directory renames — metadata-only on a real
         filesystem/HDFS (on S3-style stores this step becomes a
-        partition-manifest commit instead)."""
+        partition-manifest commit instead). ``touched_buckets`` is
+        computed by run_entity (snapshot-key-typed hash — see the type
+        note there) and is None exactly when ``snapshot`` is None."""
         from pyspark.sql import functions as F
 
         out = self._sink_path(entity)
@@ -312,24 +314,10 @@ class EntityPipeline:
         shutil.rmtree(tmp, ignore_errors=True)
         if snapshot is None:
             result = cdc.resolve_snapshot(prepared, tie_breakers=self.tie_breakers)
-            buckets = None
         else:
-            # precomputed in run_entity (snapshot-key-typed hash — see
-            # the type note there); the fallback covers direct callers
-            if touched_buckets is None:
-                ktype = snapshot.schema[cdc.KEY].dataType
-                touched_buckets = [
-                    r["__b"]
-                    for r in prepared.select(
-                        self._bucket_col(F.col(cdc.KEY).cast(ktype)).alias("__b")
-                    )
-                    .distinct()
-                    .collect()
-                ]
-            buckets = touched_buckets
-            pruned_snapshot = snapshot.filter(F.col("__bucket").isin(buckets)).drop(
-                "__bucket"
-            )
+            pruned_snapshot = snapshot.filter(
+                F.col("__bucket").isin(touched_buckets)
+            ).drop("__bucket")
             result = cdc.merge_cdc(
                 pruned_snapshot, prepared, tie_breakers=self.tie_breakers
             )
@@ -342,11 +330,11 @@ class EntityPipeline:
         # between the two leaves old buckets readable under the wider
         # schema with NULLs for the not-yet-landed column, and the
         # uncommitted watermark re-applies the delta on retry).
-        if buckets is None:
+        if snapshot is None:
             sinks.write_table_schema(tmp, result.schema)  # rides the rename
         else:
             sinks.write_table_schema(out, result.schema)
-        if buckets is None:
+        if snapshot is None:
             # Switching an existing pointer-layout sink to bucketed.
             # The old pointer + versions are RENAMED aside (atomic,
             # metadata-only — never deleted before the new data is in
@@ -366,7 +354,7 @@ class EntityPipeline:
             os.replace(tmp, out)
             shutil.rmtree(aside, ignore_errors=True)
         else:
-            self._swap_buckets(out, tmp, [f"__bucket={b}" for b in buckets])
+            self._swap_buckets(out, tmp, [f"__bucket={b}" for b in touched_buckets])
 
     def _swap_buckets(self, out: str, tmp: str, names: list[str]) -> None:
         """Two-phase bucket swap: each replaced bucket is moved ASIDE

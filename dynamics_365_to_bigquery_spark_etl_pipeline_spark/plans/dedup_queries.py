@@ -183,11 +183,11 @@ def _minhash_parts_build(
        At 100 TB the staging becomes scratch parquet (checkpoint blocks
        are executor-local, not fault-tolerant) — the layout the
        incremental dedup INDEX already persists.
-    3. fan out rep pairs to member pairs (two equi-joins) and emit
-       intra-clone-group pairs at jacc 1.0 — both output-linear.
-       Documents with EMPTY shingle sets never enter the raw pipeline,
-       so their clone groups are excluded here too (the semi-join on
-       `sh`'s doc ids).
+    3. fan out through ``dedup.fan_out_clones``: clones share shingle
+       sets, so a member pair's jacc is its rep pair's and intra-clone
+       pairs sit at jacc 1.0. Documents with EMPTY shingle sets never
+       enter the raw pipeline, so their clone groups are excluded here
+       too (the semi-join on `sh`'s doc ids).
 
     Measured sf1 (10x-cloned corpus, 391,751 result pairs): md5 path
     66 -> 18 s, fast 29 -> 16 s — and the downstream consumers inherit
@@ -262,7 +262,8 @@ def _minhash_parts_build(
     )
 
     # live member map: only members whose group participates (non-empty
-    # shingles). STAGED — four consumers (ma, mb, intra x/y) would each
+    # shingles). STAGED — the fan-out reads it four times (two member
+    # joins, both sides of the intra self-join), and each read would
     # re-run the corpus scan + dedup groupBy/join otherwise; the
     # checkpoint is two longs per row.
     live = mem.join(
@@ -272,33 +273,11 @@ def _minhash_parts_build(
 
 
 def _minhash_pairs(spark: SparkSession, sf_dir: str, fast: bool) -> DataFrame:
-    """Member-level pair set: `_minhash_parts` fanned out (rep pairs ->
-    member cross pairs via two equi-joins; intra-clone pairs at jacc
-    1.0) — both output-linear. See `_minhash_parts` for the routing
-    docstring and measurements."""
+    """Member-level pair set: `_minhash_parts` fanned out (intra-clone
+    pairs at jacc 1.0). See `_minhash_parts` for the routing docstring
+    and measurements."""
     rep_pairs, live = _minhash_parts(spark, sf_dir, fast)
-    ma = live.select(F.col("_rid").alias("id_a"), F.col("doc_id").alias("_ma"))
-    mb = live.select(F.col("_rid").alias("id_b"), F.col("doc_id").alias("_mb"))
-    cross = (
-        rep_pairs.join(ma, "id_a")
-        .join(mb, "id_b")
-        .select(
-            F.least("_ma", "_mb").alias("id_a"),
-            F.greatest("_ma", "_mb").alias("id_b"),
-            "jacc",
-        )
-    )
-    x, y = live.alias("x"), live.alias("y")
-    intra = (
-        x.join(y, "_rid")
-        .where(F.col("x.doc_id") < F.col("y.doc_id"))
-        .select(
-            F.col("x.doc_id").alias("id_a"),
-            F.col("y.doc_id").alias("id_b"),
-            F.lit(1.0).alias("jacc"),
-        )
-    )
-    return cross.unionByName(intra)
+    return D.fan_out_clones(rep_pairs, live, "doc_id", {"jacc": F.lit(1.0)})
 
 
 def q_dedup_minhash_fast(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -447,42 +426,18 @@ def _simhash_query(
         .select("doc_id", "blocks")
     )
     pairs = _simhash_pairs_from_sigs(sigs)
-    return _simhash_route_fanout(pairs, mem, sigs) if routed else pairs
-
-
-def _simhash_route_fanout(
-    rep_pairs: DataFrame, mem: DataFrame, sigs: DataFrame
-) -> DataFrame:
-    """Fan rep-level simhash pairs out to member pairs (hamming rides —
-    clones share blocks, so a member pair's hamming IS its rep pair's)
-    and emit clone-group intra pairs at hamming 0 (identical blocks),
-    restricted to members whose group produced postings (non-empty
-    shingles — the same exclusion the raw pipeline applies)."""
+    if not routed:
+        return pairs
+    # Clones share blocks, so a member pair's hamming IS its rep pair's
+    # and intra-clone pairs sit at hamming 0. Only members whose group
+    # produced postings fan out (non-empty shingles — the same exclusion
+    # the raw pipeline applies).
     live = mem.join(
         sigs.select(F.col("doc_id").alias("_rid")), "_rid", "left_semi"
     ).transform(stage)
-    ma = live.select(F.col("_rid").alias("id_a"), F.col("doc_id").alias("_ma"))
-    mb = live.select(F.col("_rid").alias("id_b"), F.col("doc_id").alias("_mb"))
-    cross = (
-        rep_pairs.join(ma, "id_a")
-        .join(mb, "id_b")
-        .select(
-            F.least("_ma", "_mb").alias("id_a"),
-            F.greatest("_ma", "_mb").alias("id_b"),
-            "hamming",
-        )
+    return D.fan_out_clones(
+        pairs, live, "doc_id", {"hamming": F.lit(0).cast("long")}
     )
-    x, y = live.alias("x"), live.alias("y")
-    intra = (
-        x.join(y, "_rid")
-        .where(F.col("x.doc_id") < F.col("y.doc_id"))
-        .select(
-            F.col("x.doc_id").alias("id_a"),
-            F.col("y.doc_id").alias("id_b"),
-            F.lit(0).cast("long").alias("hamming"),
-        )
-    )
-    return cross.unionByName(intra)
 
 
 def _simhash_pairs_from_sigs(sigs: DataFrame) -> DataFrame:
@@ -657,10 +612,10 @@ def q_dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     2. assignment + within-cluster cosine self-join over
        REPRESENTATIVES only — every step the JVM-fold cosine the SQL
        oracle mirrors term-for-term;
-    3. output-linear fan-out: rep pairs -> member cross pairs via two
-       equi-joins on the (rep, member) map; clone groups -> intra
-       pairs gated by the SAME cosine(v,v) >= threshold predicate the
-       raw self-join applies to a pair of identical members.
+    3. fan out through ``dedup.fan_out_clones``: clone groups emit
+       intra pairs in their rep's cluster, gated by the SAME
+       cosine(v,v) >= threshold predicate the raw self-join applies to
+       a pair of identical members.
 
     The DuckDB oracle is the UNROUTED full composition, so it
     independently verifies the routing loses nothing; the pre-r8 plan
@@ -724,17 +679,6 @@ def q_dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(cosine(F.col("va"), F.col("vb")) >= COSINE_DUP_MIN)
         .select("cluster_id", "id_a", "id_b")
     )
-    ma = slim.select(F.col("_rid").alias("id_a"), F.col("_gid").alias("_ma"))
-    mb = slim.select(F.col("_rid").alias("id_b"), F.col("_gid").alias("_mb"))
-    cross = (
-        rep_pairs.join(ma, "id_a")
-        .join(mb, "id_b")
-        .select(
-            "cluster_id",
-            F.least("_ma", "_mb").alias("id_a"),
-            F.greatest("_ma", "_mb").alias("id_b"),
-        )
-    )
     # intra-clone pairs: the raw self-join evaluates cosine(va, vb) on
     # two identical arrays — the same expression as cosine(v, v) on the
     # rep, so degenerate inputs (zero-norm, threshold=1.0 rounding)
@@ -742,18 +686,9 @@ def q_dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     self_pass = assigned.filter(
         cosine(F.col("embedding"), F.col("embedding")) >= COSINE_DUP_MIN
     ).select(F.col("vec_id").alias("_rid"), F.col("bucket_id").alias("cluster_id"))
-    x, y = slim.alias("x"), slim.alias("y")
-    intra = (
-        x.join(y, "_rid")
-        .where(F.col("x._gid") < F.col("y._gid"))
-        .join(self_pass, "_rid")
-        .select(
-            "cluster_id",
-            F.col("x._gid").alias("id_a"),
-            F.col("y._gid").alias("id_b"),
-        )
-    )
-    return cross.unionByName(intra)
+    return D.fan_out_clones(
+        rep_pairs, slim, "_gid", {"cluster_id": F.col("cluster_id")}, self_pass
+    ).select("cluster_id", "id_a", "id_b")
 
 
 def _routed_group_labels(rep_pairs: DataFrame, live: DataFrame) -> DataFrame:

@@ -174,7 +174,7 @@ def q_sim_ivf_layout_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
                     + [d for ds in _RETIRED_LAYOUTS.values() for d in ds]
                 ]
             )
-        S.build_ivf_layout(emb, trained, layout, scorer="matmul")
+        S.build_ivf_layout(emb, trained, layout)
         _LAYOUT_CACHE[key] = layout
     return S.matmul_topk_from_layout(
         spark, layout, trained, queries, k=TOP_K, nprobe=N_PROBE

@@ -66,7 +66,7 @@ def main() -> None:
         cents = S.refine_centroids(emb.sample(0.1, seed=42), seeds)
         cents = cents.localCheckpoint()
         layout = os.path.join(work, "ivf")
-        S.build_ivf_layout(emb, cents, layout, scorer="matmul")
+        S.build_ivf_layout(emb, cents, layout)
         build_s = time.perf_counter() - t0
 
         # ---- probe per query batch against the persisted layout

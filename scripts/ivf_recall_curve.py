@@ -113,7 +113,7 @@ def recall_curve(
 
     layout = tempfile.mkdtemp(prefix="ivf_recall_curve_")
     try:
-        S.build_ivf_layout(emb, cents, layout, scorer="matmul")
+        S.build_ivf_layout(emb, cents, layout)
         curve: dict[int, float] = {}
         for nprobe in nprobes:
             got: dict[int, set] = {}

@@ -333,35 +333,6 @@ def test_brute_force_max_queries_guard(spark):
     assert brute_force_topk(emb, q1, k=3, max_queries=10).count() == 3
 
 
-def test_ivf_layout_probe_equals_in_query_ivf(spark, tmp_path):
-    """The persisted-layout probe (build once, partition-pruned reads)
-    must return exactly the in-query ivf_topk result for the same
-    centroids — the amortization changes WHERE assignment cost is paid,
-    never the answer."""
-    from dynamics_365_to_bigquery_spark_etl_pipeline_spark.operators.similarity import (
-        build_ivf_layout,
-        ivf_topk,
-        ivf_topk_from_layout,
-    )
-
-    emb = load_table(spark, SF_DIR, "embeddings").select("vec_id", "embedding")
-    centroids = emb.filter(F.col("vec_id") < 16)
-    queries = emb.filter(F.col("vec_id") % 100 == 0)
-
-    want = {
-        (r.query_id, r.neighbor_id, r.rank)
-        for r in ivf_topk(emb, centroids, queries, k=10, nprobe=4).collect()
-    }
-
-    layout = str(tmp_path / "ivf")
-    build_ivf_layout(emb, centroids, layout)
-    got_df = ivf_topk_from_layout(
-        spark, layout, centroids, queries, k=10, nprobe=4
-    )
-    got = {(r.query_id, r.neighbor_id, r.rank) for r in got_df.collect()}
-    assert got == want and len(got) > 0
-
-
 def test_matmul_ivf_layout_full_recall_at_high_nprobe(spark, tmp_path):
     """The matmul-shaped build + probe (argmax-kernel assignment,
     partition-pruned BLAS scoring): with nprobe == #centroids (probe
@@ -379,7 +350,7 @@ def test_matmul_ivf_layout_full_recall_at_high_nprobe(spark, tmp_path):
     queries = emb.filter(F.col("vec_id") % 100 == 0)
 
     layout = str(tmp_path / "ivf")
-    build_ivf_layout(emb, centroids, layout, scorer="matmul")
+    build_ivf_layout(emb, centroids, layout)
 
     exact = {
         (r.query_id, r.neighbor_id, r.rank)
