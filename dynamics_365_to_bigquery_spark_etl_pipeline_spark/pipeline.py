@@ -145,9 +145,8 @@ class EntityPipeline:
         path = self._sink_path(entity)
         if version is not None:
             return self.spark.read.parquet(sinks.version_path(path, version))
-        # resolve through the pointer backend (symlink OR manifest) —
-        # ``path`` itself is not a filesystem object under the manifest
-        # backend for pointer sinks
+        # resolve the pointer once, so every file of the read comes from
+        # one version even if a publish swaps the pointer meanwhile
         cur = sinks.current_version_path(path)
         if cur is None:
             return None
@@ -206,6 +205,16 @@ class EntityPipeline:
             out = self._sink_path(entity)
             self._recover_staging(out, out + "__staging")
         snapshot = self.read_snapshot(entity) if state else None
+        if state and snapshot is None:
+            # A committed watermark means earlier files were merged into
+            # a published snapshot. Without it, this delta alone would be
+            # published as the whole table and the earlier rows lost.
+            raise FileNotFoundError(
+                f"{entity} has a committed watermark but no published "
+                f"snapshot at {self._sink_path(entity)}; to rebuild it from "
+                f"every landed file, clear the entity's watermark state "
+                f"({self.store._path(entity)})"
+            )
         prepared = prepare_entity_frame(delta)
         # NOT pre-staged, by measurement (r10 verdict #7): the
         # bucketed/rollup path consumes `prepared` 2-3 times and each
@@ -267,8 +276,7 @@ class EntityPipeline:
             # ONE physical write per run: the merge plan reads the
             # current version through the sink pointer while the new
             # version is written beside it, then the pointer swaps
-            # atomically (Iceberg-style snapshot commit; on an object
-            # store the symlink becomes a manifest/pointer object).
+            # atomically (Iceberg-style snapshot commit).
             out = self._sink_path(entity)
             vdir = sinks.next_version_dir(out)
             result.write.mode("overwrite").parquet(vdir)
@@ -301,8 +309,9 @@ class EntityPipeline:
         (partition pruning on the snapshot scan) and replaces only those
         partitions. ONE physical Spark write to a staging dir, then
         per-bucket directory renames — metadata-only on a real
-        filesystem/HDFS (on S3-style stores this step becomes a
-        partition-manifest commit instead). ``touched_buckets`` is
+        filesystem/HDFS; S3-style stores have no directory rename, so
+        a port to them would replace every rename here, not only the
+        sink pointer. ``touched_buckets`` is
         computed by run_entity (snapshot-key-typed hash — see the type
         note there) and is None exactly when ``snapshot`` is None."""
         from pyspark.sql import functions as F

@@ -7,26 +7,12 @@ Layout for a sink published at ``out``:
     out               -> symlink (atomic pointer) to the current version
     out__versions/    -> v_000001, v_000002, ... (current + previous kept)
 
-Readers always go through the pointer, so they see either the old or
-the new snapshot, never a partial write; an in-flight reader that
-resolved the pointer before a swap keeps a complete snapshot because
-the previous version is retained (time travel / Iceberg-style commit).
-
-Two pointer BACKENDS implement the same protocol behind the same
-functions (selected by ``SPARK_GRAFT_SINK_POINTER``):
-
-- ``symlink`` (default): the pointer is a symlink at ``out`` swapped
-  with ``os.replace`` — the POSIX-filesystem commit.
-- ``manifest``: the pointer is a small JSON object at
-  ``out__pointer.json`` naming the current version dir — the
-  object-store commit (S3-style stores have no atomic rename of
-  directories or symlinks, but a single-object PUT is atomic; this is
-  the Delta ``_last_checkpoint`` / Iceberg ``version-hint`` shape).
-  The backend NEVER creates a symlink or renames a directory on the
-  commit path; locally the atomic PUT is emulated by a temp-file
-  write + single-file replace. Readers resolve through
-  ``current_version_path`` (both backends), never through ``out``
-  itself.
+The commit is ONE pointer swap: a fresh symlink is renamed over ``out``
+with ``os.replace``, which POSIX filesystems make atomic. Readers always
+go through the pointer, so they see either the old or the new snapshot,
+never a partial write; an in-flight reader that resolved the pointer
+before a swap keeps a complete snapshot because the previous version is
+retained (time travel / Iceberg-style commit).
 
 Shared by the batch pipeline (``pipeline.EntityPipeline``) and the
 streaming merge (``streaming.cdc_stream.stream_cdc_merge``), so both
@@ -36,30 +22,20 @@ paths have exactly ONE physical write per run/micro-batch.
 from __future__ import annotations
 
 import json
+import math
 import os
 import shutil
 
 VERSIONS_SUFFIX = "__versions"
 SWAP_SUFFIX = "__swap"
-POINTER_SUFFIX = "__pointer.json"
 SCHEMA_NAME = "_schema.json"
-
-
-def pointer_backend() -> str:
-    """Read the backend per call so tests can toggle via env."""
-    return os.environ.get("SPARK_GRAFT_SINK_POINTER", "symlink")
-
-
-def _manifest_path(out: str) -> str:
-    return out + POINTER_SUFFIX
+META_NAME = "_sink_meta.json"
 
 
 def _atomic_put(path: str, payload: dict) -> None:
-    """Local emulation of an object store's atomic single-object PUT:
-    readers of ``path`` see the old bytes or the new bytes, never a
-    torn write. (The file replace here stands in for PUT semantics —
-    it is a single OBJECT swap, not the directory/symlink rename the
-    symlink backend relies on.)"""
+    """Write ``payload`` as JSON at ``path`` through a temp file and one
+    ``os.replace``: readers of ``path`` see the old bytes or the new
+    bytes, never a torn write."""
     tmp = path + ".tmp"
     with open(tmp, "w") as f:
         json.dump(payload, f)
@@ -161,8 +137,6 @@ def _migrate_legacy_dir(out: str) -> None:
     the subsequent swap never hits ENOTDIR."""
     if not os.path.isdir(out) or os.path.islink(out):
         return
-    if pointer_backend() == "manifest" and os.path.exists(_manifest_path(out)):
-        return  # manifest-published sink; the real dir is bucketed data
     if is_bucketed_dir(out):
         raise ValueError(
             f"{out} is a bucketed sink directory; it cannot be migrated "
@@ -174,16 +148,17 @@ def _migrate_legacy_dir(out: str) -> None:
     existing = list_versions(out)
     n = int(existing[-1][2:]) + 1 if existing else 1
     legacy = os.path.join(vroot, f"v_{n:06d}")
-    # one-time layout upgrade, not the commit path: on a real object
-    # store this rename is a copy job run once at migration
     os.rename(out, legacy)
-    if pointer_backend() == "manifest":
-        _atomic_put(_manifest_path(out), {"current": os.path.abspath(legacy)})
-        return
+    _swap_pointer(out, legacy)
+
+
+def _swap_pointer(out: str, vdir: str) -> None:
+    """The commit: build the new symlink beside ``out``, then rename it
+    over ``out`` in one atomic ``os.replace``."""
     tmp = out + SWAP_SUFFIX
     if os.path.lexists(tmp):
         os.unlink(tmp)
-    os.symlink(os.path.abspath(legacy), tmp)
+    os.symlink(os.path.abspath(vdir), tmp)
     os.replace(tmp, out)
 
 
@@ -223,37 +198,50 @@ def publish_version(out: str, vdir: str, keep: int = 2) -> None:
     readers need a larger ``keep``, mirroring snapshot-retention tuning
     in table formats."""
     _migrate_legacy_dir(out)
-    if pointer_backend() == "manifest":
-        # the object-store commit: ONE atomic small-object PUT — no
-        # symlink, no directory rename anywhere on this path
-        _atomic_put(_manifest_path(out), {"current": os.path.abspath(vdir)})
-    else:
-        tmp = out + SWAP_SUFFIX
-        if os.path.lexists(tmp):
-            os.unlink(tmp)
-        os.symlink(os.path.abspath(vdir), tmp)
-        os.replace(tmp, out)
+    _swap_pointer(out, vdir)
     for old in list_versions(out)[:-keep]:
         shutil.rmtree(os.path.join(_versions_root(out), old), ignore_errors=True)
 
 
 def current_version_path(out: str) -> str | None:
-    """Real path of the current version, or None if never published.
-    This is the READ path for both backends — callers must resolve
-    through it rather than opening ``out`` directly (the manifest
-    backend has no filesystem object at ``out`` for pointer sinks)."""
-    if pointer_backend() == "manifest":
-        try:
-            with open(_manifest_path(out)) as f:
-                return json.load(f)["current"]
-        except FileNotFoundError:
-            # bucketed/real-dir sinks have data at ``out`` itself
-            if os.path.isdir(out) and not os.path.islink(out):
-                return os.path.realpath(out)
-            return None
+    """Real path of the current version (for a bucketed sink, the data
+    directory at ``out`` itself), or None if never published."""
     if not os.path.lexists(out):
         return None
     return os.path.realpath(out)
+
+
+def _rewrite_current(spark, out: str, what: str, target_bytes: int, keep: int, write) -> int:
+    """Maintenance rewrite shared by `compact` and `recluster`: size the
+    CURRENT version into ``ceil(size / target_bytes)`` files, let
+    ``write(df, vdir, n_files)`` produce the next version, carry the
+    commit metadata along and publish. Returns the new file count."""
+    if is_bucketed_dir(out):
+        raise ValueError(
+            f"{out} is a bucketed sink; whole-table {what} would "
+            "destroy the bucket layout — use EntityPipeline.compact_buckets"
+        )
+    cur = current_version_path(out)
+    if cur is None:
+        raise FileNotFoundError(f"nothing published at {out}")
+    size = sum(
+        os.path.getsize(os.path.join(dp, f))
+        for dp, _, fs in os.walk(cur)
+        for f in fs
+        if f.endswith(".parquet")
+    )
+    n_files = max(1, math.ceil(size / target_bytes))
+    vdir = next_version_dir(out)
+    write(spark.read.parquet(cur), vdir, n_files)
+    # A maintenance rewrite keeps the content: the prior version's commit
+    # metadata still describes it, so it rides along. Dropping it would
+    # strip replay guards (e.g. the rollup's folded-file list) from the
+    # current version.
+    meta_src = os.path.join(cur, META_NAME)
+    if os.path.exists(meta_src):
+        shutil.copyfile(meta_src, os.path.join(vdir, META_NAME))
+    publish_version(out, vdir, keep=keep)
+    return sum(f.endswith(".parquet") for f in os.listdir(vdir))
 
 
 def compact(spark, out: str, target_bytes: int = 128 * 1024 * 1024, keep: int = 2) -> int:
@@ -271,34 +259,11 @@ def compact(spark, out: str, target_bytes: int = 128 * 1024 * 1024, keep: int = 
 
     ``coalesce`` (not ``repartition``) does the merge: no shuffle, each
     output task concatenates input splits."""
-    import math
 
-    if is_bucketed_dir(out):
-        raise ValueError(
-            f"{out} is a bucketed sink; whole-table compaction would "
-            "destroy the bucket layout — use EntityPipeline.compact_buckets"
-        )
-    cur = current_version_path(out)
-    if cur is None:
-        raise FileNotFoundError(f"nothing published at {out}")
-    size = sum(
-        os.path.getsize(os.path.join(dp, f))
-        for dp, _, fs in os.walk(cur)
-        for f in fs
-        if f.endswith(".parquet")
-    )
-    n_files = max(1, math.ceil(size / target_bytes))
-    vdir = next_version_dir(out)
-    spark.read.parquet(cur).coalesce(n_files).write.parquet(vdir)
-    # A compaction is a pure rewrite: the prior version's commit
-    # metadata still describes the content, so it rides along. Dropping
-    # it would strip replay guards (e.g. the rollup's folded-file list)
-    # from the current version.
-    meta_src = os.path.join(cur, META_NAME)
-    if os.path.exists(meta_src):
-        shutil.copyfile(meta_src, os.path.join(vdir, META_NAME))
-    publish_version(out, vdir, keep=keep)
-    return sum(f.endswith(".parquet") for f in os.listdir(vdir))
+    def write(df, vdir, n_files):
+        df.coalesce(n_files).write.parquet(vdir)
+
+    return _rewrite_current(spark, out, "compaction", target_bytes, keep, write)
 
 
 def recluster(
@@ -318,34 +283,12 @@ def recluster(
     enough micro-batch merges every file spans the whole key domain and
     min/max skipping stops working, so periodic re-sorting is the same
     kind of maintenance as bin-packing."""
-    import math
+    cluster = write_clustered if len(cluster_cols) == 1 else write_zordered
 
-    if is_bucketed_dir(out):
-        raise ValueError(
-            f"{out} is a bucketed sink; whole-table reclustering would "
-            "destroy the bucket layout — use EntityPipeline.compact_buckets"
-        )
-    cur = current_version_path(out)
-    if cur is None:
-        raise FileNotFoundError(f"nothing published at {out}")
-    size = sum(
-        os.path.getsize(os.path.join(dp, f))
-        for dp, _, fs in os.walk(cur)
-        for f in fs
-        if f.endswith(".parquet")
-    )
-    n_files = max(1, math.ceil(size / target_bytes))
-    vdir = next_version_dir(out)
-    df = spark.read.parquet(cur)
-    if len(cluster_cols) == 1:
-        write_clustered(df, vdir, cluster_cols, n_files=n_files)
-    else:
-        write_zordered(df, vdir, cluster_cols, n_files=n_files)
-    meta_src = os.path.join(cur, META_NAME)
-    if os.path.exists(meta_src):
-        shutil.copyfile(meta_src, os.path.join(vdir, META_NAME))
-    publish_version(out, vdir, keep=keep)
-    return sum(f.endswith(".parquet") for f in os.listdir(vdir))
+    def write(df, vdir, n_files):
+        cluster(df, vdir, cluster_cols, n_files=n_files)
+
+    return _rewrite_current(spark, out, "reclustering", target_bytes, keep, write)
 
 
 def write_clustered(df, out: str, cluster_cols: list[str], n_files: int = 0) -> None:
@@ -401,16 +344,11 @@ def write_zordered(
     ).parquet(out)
 
 
-META_NAME = "_sink_meta.json"
-
-
 def write_meta(vdir: str, payload: dict) -> None:
     """Attach commit metadata to an (unpublished) version dir. The
     underscore prefix makes Spark's parquet reader ignore the file, so
     metadata rides inside the version it describes and is swapped /
     retained / GC'd atomically with it."""
-    import json
-
     with open(os.path.join(vdir, META_NAME), "w") as f:
         json.dump(payload, f)
 
@@ -418,8 +356,6 @@ def write_meta(vdir: str, payload: dict) -> None:
 def read_meta(out: str) -> dict | None:
     """Commit metadata of the CURRENT version (None if unpublished or
     the version carries none)."""
-    import json
-
     cur = current_version_path(out)
     if cur is None:
         return None

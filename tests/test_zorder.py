@@ -107,7 +107,7 @@ def test_zorder_layout_preserves_data(spark, tmp_path):
     assert have == want
 
 
-def test_recluster_publishes_stats_bounded_version(spark, tmp_path, sink_backend):
+def test_recluster_publishes_stats_bounded_version(spark, tmp_path):
     """OPTIMIZE-style maintenance through the versioned sink: an
     unsorted (micro-batch-accreted) table is rewritten Z-ordered as a
     NEW version via the same atomic commit — data identical, footer
