@@ -144,25 +144,23 @@ class EntityPipeline:
         keeps current + previous), a positive n the literal v_{n}."""
         path = self._sink_path(entity)
         if version is not None:
-            return self.spark.read.parquet(sinks.version_path(path, version))
+            return sinks.read_version(self.spark, sinks.version_path(path, version))
         # resolve the pointer once, so every file of the read comes from
         # one version even if a publish swaps the pointer meanwhile
         cur = sinks.current_version_path(path)
         if cur is None:
             return None
-        # Bucketed sinks rewrite only delta-touched buckets, so after
-        # schema drift the directory holds MIXED parquet schemas; which
-        # footer spark.read samples is unspecified, so a plain read can
-        # silently drop a drifted column (and the next merge would then
-        # erase it permanently). The canonical merged schema is commit
-        # metadata (written atomically by _write_bucketed); passing it
-        # explicitly makes files lacking a column yield NULLs — the
-        # drift-union semantics — deterministically. Pointer-sink
-        # versions are full self-consistent rewrites and need no schema.
-        schema = sinks.read_table_schema(cur)
-        if schema is not None:
-            return self.spark.read.schema(schema).parquet(cur)
-        if sinks.is_bucketed_dir(cur):
+        # The canonical schema is commit metadata of every version
+        # (sinks.write_version for pointer versions, _write_bucketed for
+        # the bucketed dir), and sinks.read_version reads through it: no
+        # footer-inference job. For a bucketed sink it is also what keeps
+        # drifted columns: only delta-touched buckets are rewritten, so
+        # after drift the directory holds MIXED parquet schemas, and a
+        # footer read samples one of them at random (silently dropping a
+        # drifted column, which the next merge would erase for good).
+        # With the schema passed explicitly, files lacking a column yield
+        # NULLs — the drift-union semantics — deterministically.
+        if sinks.is_bucketed_dir(path) and sinks.read_table_schema(cur) is None:
             # Pre-r7 bucketed sink: no schema metadata yet, and after
             # drift the dir holds MIXED footers — footer sampling here
             # is the original r6 data-loss bug (the next merge would
@@ -182,7 +180,7 @@ class EntityPipeline:
             except OSError:
                 pass  # read-only store: serve the frame, skip the cache
             return merged
-        return self.spark.read.parquet(cur)
+        return sinks.read_version(self.spark, cur)
 
     def run_entity(self, entity: str) -> dict:
         """Process one entity; returns a status dict. Watermark commits
@@ -279,7 +277,7 @@ class EntityPipeline:
             # atomically (Iceberg-style snapshot commit).
             out = self._sink_path(entity)
             vdir = sinks.next_version_dir(out)
-            result.write.mode("overwrite").parquet(vdir)
+            sinks.write_version(result, vdir)
             sinks.publish_version(out, vdir)
         if rollup_needs_recompute:
             self._rollup_recompute(entity, batch_files)
@@ -447,15 +445,15 @@ class EntityPipeline:
         from .operators import incr
 
         return incr.finalize_group_stats(
-            self.spark.read.parquet(
-                sinks.current_version_path(self._rollup_path(entity))
+            sinks.read_version(
+                self.spark, sinks.current_version_path(self._rollup_path(entity))
             )
         )
 
     def _publish_rollup_state(self, entity: str, state: DataFrame, batch_files: list[str]) -> None:
         out = self._rollup_path(entity)
         vdir = sinks.next_version_dir(out)
-        state.write.mode("overwrite").parquet(vdir)
+        sinks.write_version(state, vdir)
         sinks.write_meta(vdir, {"files": batch_files})
         sinks.publish_version(out, vdir)
 
@@ -523,7 +521,7 @@ class EntityPipeline:
                     sorted(set(self.rollup_aggs) & incr.NON_RETRACTABLE_AGGS),
                 )
                 return True
-            old_state = self.spark.read.parquet(sinks.current_version_path(out))
+            old_state = sinks.read_version(self.spark, sinks.current_version_path(out))
             kcol = cdc.KEY
             # delta key CAST to the snapshot's key type before the
             # semi-join (same rule as the touched-bucket hash): CSV

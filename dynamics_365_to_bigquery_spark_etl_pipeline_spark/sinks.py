@@ -17,6 +17,15 @@ retained (time travel / Iceberg-style commit).
 Shared by the batch pipeline (``pipeline.EntityPipeline``) and the
 streaming merge (``streaming.cdc_stream.stream_cdc_merge``), so both
 paths have exactly ONE physical write per run/micro-batch.
+
+The table schema is commit metadata of EVERY version, pointer and
+bucketed alike: ``write_version`` records the written frame's schema as
+``_schema.json`` inside the version dir before the pointer swap, and
+``read_version`` reads a version through it. A schema-pinned read
+launches no Spark job; a footer read launches one schema-inference job
+per read, which the nightly merge used to pay once per entity. A
+version written before versions carried the schema falls back to the
+footer read.
 """
 
 from __future__ import annotations
@@ -49,9 +58,13 @@ def _versions_root(out: str) -> str:
 def write_table_schema(data_dir: str, schema) -> None:
     """Record the canonical table schema inside ``data_dir`` (atomic
     single-object PUT; the underscore prefix hides it from Spark's
-    parquet reader).
+    parquet reader). Every published version carries one: a pointer
+    sink's version dir (``write_version``) and a bucketed sink's data
+    directory (``EntityPipeline._write_bucketed``).
 
-    Why this exists: a bucketed sink rewrites ONLY delta-touched
+    For a pointer version the schema saves the footer-inference job of
+    every read (``read_version``). For a bucketed sink it is also what
+    keeps drifted columns: a bucketed sink rewrites ONLY delta-touched
     buckets, so after schema drift the directory holds parquet files
     with DIFFERENT schemas. ``spark.read.parquet`` samples ONE footer
     (``mergeSchema`` defaults false) — whether the drifted column
@@ -68,8 +81,8 @@ def write_table_schema(data_dir: str, schema) -> None:
 
 def read_table_schema(data_dir: str):
     """Canonical schema recorded in ``data_dir``, as a ``StructType``
-    (None when absent — e.g. a pre-schema-metadata bucketed sink, whose
-    next merge records one)."""
+    (None when absent — a version or bucketed sink written before the
+    schema was recorded; its next merge records one)."""
     from pyspark.sql import types as T
 
     try:
@@ -79,18 +92,49 @@ def read_table_schema(data_dir: str):
         return None
 
 
+def write_version(df, vdir: str, write=None) -> None:
+    """The writer rule of a pointer-sink version: write ``df`` into the
+    reserved (unpublished) ``vdir``, then record ``df.schema`` inside it,
+    so the schema is in place before ``publish_version`` makes the
+    version visible. ``write(df, vdir)`` replaces the plain overwrite
+    (the maintenance rewrites coalesce or cluster first)."""
+    if write is None:
+        df.write.mode("overwrite").parquet(vdir)
+    else:
+        write(df, vdir)
+    write_table_schema(vdir, df.schema)
+
+
+def read_version(spark, vdir: str):
+    """The reader rule of a pointer-sink version: read ``vdir`` through
+    its recorded schema, which launches no Spark job. A version without
+    one (written before versions carried it) is read by footer
+    inference."""
+    schema = read_table_schema(vdir)
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    return reader.parquet(vdir)
+
+
 def is_bucketed_dir(out: str) -> bool:
     """True when ``out`` is a bucketed-sink data directory (real dir
-    holding ``__bucket=`` partitions / schema metadata) rather than a
-    pointer. Maintenance ops that rewrite a whole current version
-    (compact/recluster) and the legacy-layout migration must refuse
-    these: a whole-dir rewrite would both read mixed post-drift schemas
-    by footer sampling and destroy the bucket layout."""
+    holding ``__bucket=`` partitions, or only schema metadata while
+    empty) rather than a pointer or a flat version dir. Maintenance ops
+    that rewrite a whole current version (compact/recluster) and the
+    legacy-layout migration must refuse these: a whole-dir rewrite would
+    both read mixed post-drift schemas by footer sampling and destroy
+    the bucket layout."""
     if not os.path.isdir(out) or os.path.islink(out):
         return False
-    if os.path.exists(os.path.join(out, SCHEMA_NAME)):
+    entries = os.listdir(out)
+    if any(d.startswith("__bucket=") for d in entries):
         return True
-    return any(d.startswith("__bucket=") for d in os.listdir(out))
+    # An empty bucketed sink holds its schema and no partition dir. A
+    # flat dir (a legacy sink, or a version copied to the sink path)
+    # may hold a schema too, but always holds part files: Spark writes
+    # one even for an empty frame.
+    return SCHEMA_NAME in entries and not any(
+        f.endswith(".parquet") for f in entries
+    )
 
 
 def list_versions(out: str) -> list[str]:
@@ -232,7 +276,9 @@ def _rewrite_current(spark, out: str, what: str, target_bytes: int, keep: int, w
     )
     n_files = max(1, math.ceil(size / target_bytes))
     vdir = next_version_dir(out)
-    write(spark.read.parquet(cur), vdir, n_files)
+    write_version(
+        read_version(spark, cur), vdir, lambda df, v: write(df, v, n_files)
+    )
     # A maintenance rewrite keeps the content: the prior version's commit
     # metadata still describes it, so it rides along. Dropping it would
     # strip replay guards (e.g. the rollup's folded-file list) from the

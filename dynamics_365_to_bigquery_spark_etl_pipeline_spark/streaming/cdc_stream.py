@@ -75,14 +75,14 @@ def stream_cdc_merge(
             return
         cur = sinks.current_version_path(sink_dir)
         if cur is not None:
-            snapshot = batch_df.sparkSession.read.parquet(cur)
+            snapshot = sinks.read_version(batch_df.sparkSession, cur)
             merged = cdc.merge_cdc_delta_only(
                 snapshot, batch_df, key, order_col, tie_breakers
             )
         else:
             merged = cdc.resolve_snapshot(batch_df, key, order_col, tie_breakers)
         vdir = sinks.next_version_dir(sink_dir)
-        merged.write.mode("overwrite").parquet(vdir)
+        sinks.write_version(merged, vdir)
         sinks.publish_version(sink_dir, vdir)
         if compact_every and (epoch_id + 1) % compact_every == 0:
             sinks.compact(

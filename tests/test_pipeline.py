@@ -447,6 +447,51 @@ def test_missing_snapshot_with_committed_watermark_is_entity_error(spark, zone):
     assert sinks.list_versions(out) == ["v_000001"]
 
 
+def _job_ids(spark, group: str, fn):
+    """Run ``fn()`` under the Spark job group ``group``; returns its
+    result and the ids of the jobs it launched (status tracker)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_pointer_sink_snapshot_read_and_incremental_run_job_counts(spark, zone):
+    """The pointer sink records each version's schema, so reading the
+    published snapshot launches no footer-inference job, and one
+    incremental run launches at most the 2 CSV-inference jobs of its
+    delta and the 2 jobs of the merge write (a footer-read snapshot
+    costs a fifth)."""
+    landing, sink, state = zone
+    t0 = time.time() - 100
+    _write_csv(
+        str(landing / "Items" / "b1.csv"),
+        [_live_row(f"k{i}", "2024-01-01 10:00:00", i) for i in range(20)],
+        t0,
+    )
+    pipe = _pipeline(spark, zone)
+    assert pipe.run()[0]["status"] == "ok"
+
+    snap, jobs = _job_ids(spark, "pin-read-snapshot", lambda: pipe.read_snapshot("Items"))
+    assert jobs == []
+    assert snap.count() == 20
+
+    _write_csv(
+        str(landing / "Items" / "b2.csv"),
+        [_live_row("k3", "2024-01-02 10:00:00", 33), _delete_row("k4")],
+        t0 + 50,
+    )
+    res, jobs = _job_ids(spark, "pin-incremental", lambda: pipe.run_entity("Items"))
+    assert res == {"entity": "Items", "status": "ok", "files": 1}
+    assert len(jobs) <= 4, sorted(jobs)
+    got = {r.systemid: r.amount for r in pipe.read_snapshot("Items").collect()}
+    assert len(got) == 19 and got["k3"] == 33 and "k4" not in got
+
+
 def test_duplicate_normalized_columns_dropped(spark, zone):
     """Columns colliding after suffix-strip normalization are ALL
     dropped (helper_functions.py:16-23), through the real CSV read."""

@@ -225,6 +225,118 @@ def test_pointer_sink_compact_and_recluster_preserve_drifted_column(spark, tmp_p
     assert got["k0"] == (999.0, "hello") and got["k1"] == (998.0, "world")
 
 
+def _recorded_names(vdir):
+    return sinks.read_table_schema(vdir).fieldNames()
+
+
+def _recorded_types(vdir):
+    # nullability aside: a parquet read returns every column nullable
+    return [(f.name, f.dataType) for f in sinks.read_table_schema(vdir)]
+
+
+def test_pointer_sink_schema_metadata_across_legacy_version_and_drift(spark, tmp_path):
+    """Every pointer-sink version records its schema, and a version
+    without one (written before versions carried it) still merges: the
+    next night reads it by footer and records the schema again. A drift
+    night records the widened schema, a later night without the column
+    keeps it, and compaction/recluster carry the schema into their
+    versions without changing the rows."""
+    landing, sink, state = str(tmp_path / "l"), str(tmp_path / "s"), str(tmp_path / "st")
+    t0 = time.time() - 100
+    pipe = EntityPipeline(spark, landing, sink, state)
+    out = f"{sink}/items"
+    keys = [f"k{i}" for i in range(40)]
+    _write_csv(
+        f"{landing}/Items/b1.csv",
+        BASE_COLS,
+        [_live(k, "2024-01-01 10:00:00", i) for i, k in enumerate(keys)],
+        t0,
+    )
+    assert pipe.run() == [{"entity": "Items", "status": "ok", "files": 1}]
+    cur = sinks.current_version_path(out)
+    base_names = _recorded_names(cur)
+    assert base_names == pipe.read_snapshot("Items").columns
+    assert "newcol" not in base_names
+
+    # a version from before the schema was recorded
+    os.remove(os.path.join(cur, sinks.SCHEMA_NAME))
+    _write_csv(
+        f"{landing}/Items/b2.csv",
+        BASE_COLS,
+        [_live("k5", "2024-01-02 10:00:00", 55)],
+        t0 + 50,
+    )
+    assert pipe.run() == [{"entity": "Items", "status": "ok", "files": 1}]
+    assert _recorded_names(sinks.current_version_path(out)) == base_names
+    want = {k: (float(i), None) for i, k in enumerate(keys)}
+    want["k5"] = (55.0, None)
+    assert {
+        r["systemid"]: (r["amount"], None)
+        for r in pipe.read_snapshot("Items").collect()
+    } == want
+
+    # drift night: the recorded schema widens
+    _write_csv(
+        f"{landing}/Items/b3.csv",
+        BASE_COLS + ",NewCol",
+        [
+            _live("k0", "2024-01-03 10:00:00", 999, "hello"),
+            _live("k1", "2024-01-03 10:00:00", 998, "world"),
+        ],
+        t0 + 60,
+    )
+    assert pipe.run() == [{"entity": "Items", "status": "ok", "files": 1}]
+    assert set(_recorded_names(sinks.current_version_path(out))) == {*base_names, "newcol"}
+    want.update(k0=(999.0, "hello"), k1=(998.0, "world"))
+    assert _snapshot_map(pipe.read_snapshot("Items")) == want
+
+    # a night without the column keeps it
+    _write_csv(
+        f"{landing}/Items/b4.csv",
+        BASE_COLS,
+        [_live("k7", "2024-01-04 10:00:00", 77)],
+        t0 + 70,
+    )
+    assert pipe.run() == [{"entity": "Items", "status": "ok", "files": 1}]
+    want["k7"] = (77.0, None)
+    assert "newcol" in _recorded_names(sinks.current_version_path(out))
+    assert _snapshot_map(pipe.read_snapshot("Items")) == want
+
+    rows = sorted(pipe.read_snapshot("Items").collect())
+    for rewrite in (
+        lambda: sinks.compact(spark, out),
+        lambda: sinks.recluster(spark, out, ["systemid"]),
+    ):
+        before = sinks.current_version_path(out)
+        rewrite()
+        after = sinks.current_version_path(out)
+        assert after != before
+        assert _recorded_types(after) == _recorded_types(before)
+        assert sorted(pipe.read_snapshot("Items").collect()) == rows
+    assert not sinks.is_bucketed_dir(out)
+
+
+def test_is_bucketed_dir_tells_flat_dirs_with_schema_apart(tmp_path):
+    """Flat version dirs carry ``_schema.json`` too, so the schema alone
+    marks a bucketed sink only when no part file sits beside it (an
+    empty bucketed sink)."""
+    empty_bucketed = tmp_path / "empty_bucketed"
+    empty_bucketed.mkdir()
+    (empty_bucketed / sinks.SCHEMA_NAME).write_text("{}")
+    assert sinks.is_bucketed_dir(str(empty_bucketed))
+    (empty_bucketed / "__bucket=0").mkdir()
+    assert sinks.is_bucketed_dir(str(empty_bucketed))
+
+    flat = tmp_path / "flat"
+    flat.mkdir()
+    (flat / sinks.SCHEMA_NAME).write_text("{}")
+    (flat / "part-00000-x.snappy.parquet").write_bytes(b"")
+    assert not sinks.is_bucketed_dir(str(flat))
+    pointer = tmp_path / "pointer"
+    pointer.symlink_to(empty_bucketed)
+    assert not sinks.is_bucketed_dir(str(pointer))
+
+
 def test_streaming_merge_after_batch_drift_keeps_column(spark, tmp_path):
     """The streaming foreachBatch merge re-reads the current version it
     previously wrote. Seed the sink with a DRIFTED snapshot (extra
